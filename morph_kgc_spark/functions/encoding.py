@@ -6,16 +6,19 @@ src/morph_kgc/materializer.py:127-144):
 1. IRI template references are percent-encoded with ``falcon.uri.encode_value``
    — semantically ``urllib.parse.quote(value, safe='')``: every byte of the
    UTF-8 encoding is escaped except RFC-3986 *unreserved*
-   (ALPHA / DIGIT / ``-._~``). Implemented here as an Arrow-batched pandas
-   UDF (no per-row Python in the plan; vectorization happens inside the
-   batch).
+   (ALPHA / DIGIT / ``-._~``). Implemented as the JVM ``url_encode`` plus
+   the fixup table :func:`percent_encode_fixups`.
 
 2. Literal lexical forms get N-Triples escaping in the reference's exact
-   replacement order: ``\\  \\n  \\t  \\b  \\f  \\r  "  '``. Implemented as
-   a chain of native ``F.replace`` calls — stays inside whole-stage codegen.
+   replacement order: ``\\  \\n  \\t  \\b  \\f  \\r  "  '`` (the
+   ``_NT_ESCAPES`` table).
 
-Both have pure-Python twins (``percent_encode_py`` / ``ntriples_escape_py``)
-for byte-equality tests and driver-side constant folding.
+Both tables are rendered as native ``replace`` chains that stay inside
+whole-stage codegen — as SQL strings by
+:mod:`morph_kgc_spark.functions.sqlexpr` for every RML term, and as a
+Column by :func:`percent_encode_col` for the ``toUpperCaseURL`` built-in.
+The pure-Python twins (``percent_encode_py`` / ``ntriples_escape_py``) are
+the byte-equality references of the tests and fold constants driver-side.
 """
 
 from __future__ import annotations
@@ -24,11 +27,8 @@ from contextlib import contextmanager
 from contextvars import ContextVar
 from urllib.parse import quote
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 
 def percent_encode_py(value: str) -> str:
@@ -56,17 +56,6 @@ def ntriples_escape_py(value: str) -> str:
     )
 
 
-@pandas_udf(StringType())
-def percent_encode_udf(s: pd.Series) -> pd.Series:
-    """Arrow-batched percent-encoding (IRI-safe template expansion)."""
-    # str-accessor-free map over the batch: quote() is C-accelerated and the
-    # batch transfer is Arrow; this is the vectorized slow-path the
-    # input_hint allows (no per-row Python *in the plan*).
-    return s.map(lambda v: quote(v, safe="") if v is not None else None)
-
-
-# characters needing %-encoding appear rarely in IRIs built from keys; this
-# fast-path predicate lets the compiler skip the UDF for all-safe columns.
 _NT_ESCAPES = [
     ("\\", "\\\\"),
     ("\n", "\\n"),
@@ -79,33 +68,11 @@ _NT_ESCAPES = [
 ]
 
 
-def ntriples_escape_col(col: Column) -> Column:
-    """N-Triples escaping as a native replace chain (codegen-friendly)."""
-    for search, repl in _NT_ESCAPES:
-        col = F.replace(col, F.lit(search), F.lit(repl))
-    return col
-
-
-def make_percent_encode_udf(safe: str):
-    """UDF factory for ``safe_percent_encoding`` (reference config
-    config.py:228: quote() with user-supplied safe characters instead of
-    falcon's encode-everything default, materializer.py:128-130).
-
-    Only used as a fallback for non-ASCII safe characters; the common
-    path is the pure-JVM expression in :func:`percent_encode_col`.
-    """
-
-    @pandas_udf(StringType())
-    def _enc(s: pd.Series) -> pd.Series:
-        return s.map(lambda v: quote(v, safe=safe) if v is not None else None)
-
-    return _enc
-
-
 # contextvar threading for the safe_percent_encoding config key: the
-# compiler builds Column trees driver-side, so materialize() wraps plan
-# construction in `safe_encoding_context` and every percent_encode_col
-# call sees the configured safe characters without 8 layers of kwargs.
+# compiler renders terms driver-side, so materialize() wraps plan
+# construction in `safe_encoding_context` and every IRI template
+# reference sees the configured safe characters without 8 layers of
+# kwargs.
 _SAFE_CHARS: ContextVar[str | None] = ContextVar("safe_percent_chars", default=None)
 
 
@@ -118,12 +85,17 @@ def safe_encoding_context(safe: str | None):
         _SAFE_CHARS.reset(token)
 
 
-def percent_encode_col(col: Column, safe: str | None = None) -> Column:
-    """Percent-encode a column for IRI position — pure JVM, codegen-friendly.
+_UNRESERVED = ("ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+               "abcdefghijklmnopqrstuvwxyz0123456789_.-~")
 
-    ``java.net.URLEncoder`` (behind ``F.url_encode``) differs from
-    ``urllib.parse.quote(v, safe='')`` in exactly three ways, each fixable
-    with a post-replace that cannot collide with encoder output:
+
+def percent_encode_fixups(safe: str | None = None) -> list[tuple[str, str]]:
+    """(search, replacement) pairs that turn ``url_encode(v)`` into
+    ``urllib.parse.quote(v, safe=safe)``, applied in order.
+
+    ``java.net.URLEncoder`` (behind ``url_encode``) differs from
+    ``quote(v, safe='')`` in exactly three ways, each fixable with a
+    post-replace that cannot collide with encoder output:
 
     - space → ``+`` (we want ``%20``): any original ``+`` was encoded to
       ``%2B``, so surviving ``+`` is always a space;
@@ -134,24 +106,28 @@ def percent_encode_col(col: Column, safe: str | None = None) -> Column:
 
     Both encoders UTF-8-encode then emit uppercase hex, so the chain is
     byte-identical to the reference's falcon ``encode_value``
-    (materializer.py:132) — verified by a Hypothesis property test.
+    (materializer.py:132).
 
-    ``safe`` (reference safe_percent_encoding mode) post-decodes the
-    user's extra safe characters; non-ASCII safe chars fall back to the
-    Arrow UDF.
+    ``safe`` (reference safe_percent_encoding mode, config.py:228)
+    post-decodes the user's extra safe characters. Non-ASCII ones are
+    skipped: ``quote`` drops them from ``safe`` too
+    (``quote_from_bytes`` encodes it with ``'ascii', 'ignore'``).
     """
+    fixups = [("+", "%20"), ("*", "%2A"), ("%7E", "~")]
+    for ch in dict.fromkeys(safe or ""):
+        if ch.isascii() and ch not in _UNRESERVED:
+            fixups.append(("%%%02X" % ord(ch), ch))
+    return fixups
+
+
+def percent_encode_col(col: Column, safe: str | None = None) -> Column:
+    """Column form of ``sqlexpr.percent_encode_sql`` (same fixup table),
+    for built-ins that percent-encode a function output."""
     if safe is None:
         safe = _SAFE_CHARS.get()
-    if safe and not safe.isascii():
-        return make_percent_encode_udf(safe)(col)
     out = F.url_encode(col)
-    out = F.replace(out, F.lit("+"), F.lit("%20"))
-    out = F.replace(out, F.lit("*"), F.lit("%2A"))
-    out = F.replace(out, F.lit("%7E"), F.lit("~"))
-    for ch in dict.fromkeys(safe or ""):
-        if ch in "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789_.-~":
-            continue  # never encoded in the first place
-        out = F.replace(out, F.lit("%%%02X" % ord(ch)), F.lit(ch))
+    for search, repl in percent_encode_fixups(safe):
+        out = F.replace(out, F.lit(search), F.lit(repl))
     return out
 
 
@@ -172,19 +148,3 @@ def remove_non_printable_col(col: Column) -> Column:
     only_write_printable_characters, utils.py) — pure JVM regex."""
     return F.regexp_replace(col, _NON_PRINTABLE_RE, "")
 
-
-def natural_mapping_col(col: Column, datatype: str | None) -> Column:
-    """Natural Mapping of SQL values (R2RML §10.2; materializer.py:133-144).
-
-    booleans lower-cased; xsd:dateTime ``' '``→``'T'``; xsd:integer
-    truncated of any ``.0`` tail via double→long round-trip.
-    """
-    from morph_kgc_spark import model as M
-
-    if datatype == M.XSD_BOOLEAN:
-        return F.lower(col)
-    if datatype == M.XSD_DATETIME:
-        return F.replace(col, F.lit(" "), F.lit("T"))
-    if datatype == M.XSD_INTEGER:
-        return col.cast("double").cast("long").cast("string")
-    return col

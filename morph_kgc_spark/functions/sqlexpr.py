@@ -1,23 +1,22 @@
-"""SQL-expression-string twins of the term-encoding Column builders.
+"""SQL-expression strings for the term encodings: the only term renderer.
 
 Why strings: every ``F.*`` / Column-method invocation is one py4j
 round-trip (~0.2 ms); a term map compiles to dozens of them, and a
 flagship mapping (12 rules) paid ~1.3 s of driver time just BUILDING
 Column trees (round-4 cProfile; BENCH.md fixed-cost note). Rendering
 each term as ONE SQL string and parsing it with a single ``F.expr``
-collapses that to one round-trip per term — the resulting Catalyst
-expression tree is identical (same functions, same arguments), so plans,
-codegen, and results are byte-for-byte unchanged. The Column builders in
-:mod:`morph_kgc_spark.functions.encoding` remain the fallback for
-non-SQL-expressible paths (pandas-UDF encoding for non-ASCII safe chars,
-FNML executions); ``tests/test_sqlexpr_parity.py`` pins the string twins
-against the Column builders AND the pure-Python references with
-Hypothesis over adversarial strings.
+collapses that to one round-trip per term. The strings render the
+replacement tables of :mod:`morph_kgc_spark.functions.encoding`, and
+``tests/test_sqlexpr_parity.py`` pins them against the pure-Python
+references with Hypothesis over adversarial strings.
 """
 
 from __future__ import annotations
 
-from morph_kgc_spark.functions.encoding import _NT_ESCAPES
+from morph_kgc_spark.functions.encoding import (
+    _NT_ESCAPES,
+    percent_encode_fixups,
+)
 
 
 def sql_ident(name: str) -> str:
@@ -47,32 +46,28 @@ def sql_str(value: str) -> str:
 
 
 def ntriples_escape_sql(expr: str) -> str:
-    """String twin of ``encoding.ntriples_escape_col`` (same replace
-    chain, reference materializer.py:144 order)."""
+    """N-Triples escaping as a replace chain (reference
+    materializer.py:144 order; ``encoding.ntriples_escape_py``)."""
     for search, repl in _NT_ESCAPES:
         expr = f"replace({expr}, {sql_str(search)}, {sql_str(repl)})"
     return expr
 
 
-def percent_encode_sql(expr: str, safe: str | None = None) -> str | None:
-    """String twin of ``encoding.percent_encode_col``; ``None`` when the
-    pandas-UDF fallback is required (non-ASCII safe characters)."""
-    if safe and not safe.isascii():
-        return None
+def percent_encode_sql(expr: str, safe: str | None = None) -> str:
+    """IRI percent-encoding as ``url_encode`` plus the fixup chain of
+    ``encoding.percent_encode_fixups`` (= ``quote(v, safe=safe)``)."""
     out = f"url_encode({expr})"
-    out = f"replace({out}, '+', '%20')"
-    out = f"replace({out}, '*', '%2A')"
-    out = f"replace({out}, '%7E', '~')"
-    for ch in dict.fromkeys(safe or ""):
-        if ch in ("ABCDEFGHIJKLMNOPQRSTUVWXYZ"
-                  "abcdefghijklmnopqrstuvwxyz0123456789_.-~"):
-            continue  # never encoded in the first place
-        out = f"replace({out}, {sql_str('%%%02X' % ord(ch))}, {sql_str(ch)})"
+    for search, repl in percent_encode_fixups(safe):
+        out = f"replace({out}, {sql_str(search)}, {sql_str(repl)})"
     return out
 
 
 def natural_mapping_sql(expr: str, datatype: str | None) -> str:
-    """String twin of ``encoding.natural_mapping_col`` (R2RML §10.2)."""
+    """Natural Mapping of SQL values (R2RML §10.2; materializer.py:133-144).
+
+    booleans lower-cased; xsd:dateTime ``' '``→``'T'``; xsd:integer
+    truncated of any ``.0`` tail via double→long round-trip.
+    """
     from morph_kgc_spark import model as M
 
     if datatype == M.XSD_BOOLEAN:

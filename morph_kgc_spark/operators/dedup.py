@@ -819,16 +819,17 @@ def simhash_dup_clusters(df: DataFrame, id_col: str, text_col: str,
     contract_min = int(os.environ.get(
         "MORPH_KGC_SIMHASH_CONTRACT_MIN_CANDS", "50000000"))
     sig = simhash(df, id_col, text_col, bits=bits).persist()
-    # corpus-count shortcut: n·(n−1)/2 upper-bounds the banded
-    # candidate volume for ANY signature distribution, so a corpus
-    # small enough on the raw count alone is PROVABLY sparse without
-    # the band-probe aggregate — one parquet-count job (footer
-    # statistics, no data scan) replaces a signature-materializing
-    # explode+groupBy job. Corpora above the bound still pay the
-    # exact probe; the branch decision — hence the output — is
-    # identical either way.
+    # corpus-count shortcut: each band holds at most n·(n−1)/2 same-
+    # value pairs, so n_bands·n·(n−1)/2 upper-bounds the probe's
+    # candidate volume (summed over ALL bands) for ANY signature
+    # distribution — a corpus small enough on the raw count alone is
+    # PROVABLY sparse without the band-probe aggregate, and one
+    # parquet-count job (footer statistics, no data scan) replaces a
+    # signature-materializing explode+groupBy job. Corpora above the
+    # bound still pay the exact probe; the branch decision — hence the
+    # output — is identical either way.
     n_docs = df.count()
-    if n_docs * (n_docs - 1) // 2 <= contract_min:
+    if n_bands * n_docs * (n_docs - 1) // 2 <= contract_min:
         cand_bound = 0
     else:
         width = bits // n_bands

@@ -32,6 +32,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from morph_kgc_spark import model as M
+from morph_kgc_spark.functions.encoding import _SAFE_CHARS
+from morph_kgc_spark.functions.sqlexpr import (
+    natural_mapping_sql,
+    ntriples_escape_sql,
+    percent_encode_sql,
+    sql_str,
+)
 from morph_kgc_spark.plans.compiler import _ref_col
 
 RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
@@ -45,27 +52,25 @@ RDF_NIL = f"<{RDF}nil>"
 RDF_TYPE = f"<{RDF}type>"
 
 
-def _value_term(val: Column, termtype: Optional[str], datatype: Optional[str] = None) -> Column:
-    """Wrap a gathered value in its N-Triples lexical form.
+def _value_terms(termtype: Optional[str],
+                 datatype: Optional[str] = None) -> Column:
+    """The ``vals`` array column with each gathered value wrapped in its
+    N-Triples lexical form, as one SQL ``transform`` lambda.
 
-    ``termtype=None`` means the column already holds a full lexical term
-    (e.g. a pre-built ``<iri>``) — used when values are whole IRIs that
+    ``termtype=None`` means the values already hold full lexical terms
+    (e.g. pre-built ``<iri>``s) — used when values are whole IRIs that
     must not be percent-encoded again.
     """
-    from morph_kgc_spark.functions.encoding import (
-        natural_mapping_col,
-        ntriples_escape_col,
-        percent_encode_col,
-    )
-
     if termtype is None:
-        return val
+        return F.col("vals")
     if termtype == M.IRI:
-        return F.concat(F.lit("<"), percent_encode_col(val), F.lit(">"))
-    out = F.concat(F.lit('"'), ntriples_escape_col(natural_mapping_col(val, datatype)), F.lit('"'))
-    if datatype:
-        out = F.concat(out, F.lit(f"^^<{datatype}>"))
-    return out
+        term = f"concat('<', {percent_encode_sql('v', _SAFE_CHARS.get())}, '>')"
+    else:
+        lexical = ntriples_escape_sql(natural_mapping_sql("v", datatype))
+        term = f"concat('\"', {lexical}, '\"')"
+        if datatype:
+            term = f"concat({term}, {sql_str('^^<' + datatype + '>')})"
+    return F.expr(f"transform(vals, v -> {term})")
 
 
 def gather_triples(df: DataFrame,
@@ -125,10 +130,7 @@ def gather_triples(df: DataFrame,
     def bnode(i: Column | int) -> Column:
         return F.concat(F.lit("_:g"), gkey, F.lit("_"), F.lit(i) if isinstance(i, int) else i)
 
-    terms = F.transform(
-        F.col("vals"),
-        lambda v: _value_term(v, value_termtype, value_datatype),
-    )
+    terms = _value_terms(value_termtype, value_datatype)
 
     if gather_as == RDF_LIST:
         head_node = F.when(n == 0, F.lit(RDF_NIL)) \
@@ -240,8 +242,7 @@ def gather_triples_per_row(df: DataFrame,
     named = F.col("__head").isNotNull()
     head_node = F.when(named, F.col("__head")) \
                  .otherwise(F.concat(F.lit("_:g"), F.col("__rk")))
-    terms = F.transform(
-        F.col("vals"), lambda v: _value_term(v, value_termtype, value_datatype))
+    terms = _value_terms(value_termtype, value_datatype)
 
     def t(s: Column, p: Column, o: Column) -> Column:
         return F.struct(s.alias("s"), p.alias("p"), o.alias("o"))

@@ -11,9 +11,11 @@ mirroring the reference's per-rule pandas dataflow
 Catalyst gets column pruning, NOT-NULL pushdown, and join strategy for free.
 
 Scale notes (100 TB target):
-- templates become ``concat`` trees of native expressions → whole-stage
-  codegen; the percent-encode pandas UDF only fires on rows that actually
-  contain reserved characters (see functions/encoding.percent_encode_col);
+- every term renders as ONE Spark SQL string (``_term_sql``) parsed by a
+  single ``F.expr``: templates become ``concat`` trees of native
+  expressions (``url_encode`` + replace chains) → whole-stage codegen, no
+  Python in the plan. FNML executions are projected into generated
+  columns first (``_project_executions``) and rendered from there;
 - referencing-object-map joins go through operators/joins.py which
   broadcasts small parents and can salt skewed keys;
 - set semantics = partition-local dedup at the scan (dropDuplicates is
@@ -29,13 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from morph_kgc_spark import model as M
-from morph_kgc_spark.functions.encoding import (
-    _SAFE_CHARS,
-    natural_mapping_col,
-    ntriples_escape_col,
-    ntriples_escape_py,
-    percent_encode_col,
-)
+from morph_kgc_spark.functions.encoding import _SAFE_CHARS, ntriples_escape_py
 from morph_kgc_spark.functions.sqlexpr import (
     natural_mapping_sql,
     ntriples_escape_sql,
@@ -146,15 +142,10 @@ _ABSOLUTE_IRI_RE = "^[A-Za-z][A-Za-z0-9+.-]*:"
 _INVALID_IRI_CHARS_RE = '[\\x00-\\x20<>"{}|\\\\^`]'
 
 
-def _resolve_base(term: Column, base_iri: str) -> Column:
+def _resolve_base_sql(term: str, base_iri: str) -> str:
     """Row-level base-IRI resolution (R2RML: relative IRIs resolve
     against the base; whether a value is relative depends on the row —
     RMLTC0019a has absolute and relative values in one column)."""
-    return F.when(term.rlike(_ABSOLUTE_IRI_RE), term) \
-            .otherwise(F.concat(F.lit(base_iri), term))
-
-
-def _resolve_base_sql(term: str, base_iri: str) -> str:
     return (f"(CASE WHEN {term} RLIKE {sql_str(_ABSOLUTE_IRI_RE)} "
             f"THEN {term} ELSE concat({sql_str(base_iri)}, {term}) END)")
 
@@ -171,23 +162,29 @@ def _wrap_sql(term: str, termtype: str) -> str:
 
 def _term_sql(tm: M.TermMap, *, datatype: Optional[str] = None,
               col_prefix: str = "", wrap: bool = True,
-              base_iri: str = "") -> str | None:
-    """SQL-string form of :func:`compile_term`, or ``None`` when the
-    term needs the Column path (FNML executions; non-ASCII safe chars).
+              base_iri: str = "") -> str:
+    """Spark SQL expression producing the term's N-Triples lexical form.
 
-    One ``F.expr`` on this string parses to the IDENTICAL Catalyst tree
-    the Column builders produce, for one py4j round-trip instead of
-    dozens (the round-4 ~1.3 s/flagship plan-build constant; see
-    functions/sqlexpr.py). Semantics are compile_term's, including the
-    reference parity notes there.
+    Reference: materializer.py:106-163 (_materialize_template) — constants
+    and literal template parts are emitted verbatim; only *reference values*
+    are percent-encoded (IRI position) or natural-mapped + escaped (literal
+    position); then the whole term is termtype-wrapped. ``base_iri``
+    (document-driven mappings only) resolves relative IRI results.
+
+    An EXECUTION term must have been projected by
+    :func:`_project_executions`: its ``value`` names the generated column
+    holding the function output, which renders like a reference value
+    except that IRIs are trimmed (reference materializer.py:165-197).
     """
     if tm.kind == M.CONSTANT:
         return sql_str(_wrap_py(tm.value, tm.termtype) if wrap else tm.value)
-    if tm.kind == M.EXECUTION:
-        return None
 
-    template = tm.value if tm.kind == M.TEMPLATE else "{" + tm.value + "}"
-    parts, refs = _template_parts(template)
+    if tm.kind == M.EXECUTION:
+        # the generated column is a top-level column of the frame
+        parts, refs, col_prefix = ["", ""], [tm.value], ""
+    else:
+        template = tm.value if tm.kind == M.TEMPLATE else "{" + tm.value + "}"
+        parts, refs = _template_parts(template)
     pieces: list[str] = []
     for part, ref in zip(parts, refs):
         if part:
@@ -195,8 +192,16 @@ def _term_sql(tm: M.TermMap, *, datatype: Optional[str] = None,
         e = sql_ident(col_prefix + ref)
         if tm.termtype == M.IRI and tm.kind == M.TEMPLATE:
             e = percent_encode_sql(e, _SAFE_CHARS.get())
-            if e is None:
-                return None
+        elif tm.termtype == M.IRI and tm.kind == M.EXECUTION:
+            # "IRI values are assumed correct and NOT percent encoded",
+            # only trimmed (reference: materializer.py:183-186)
+            e = f"trim({e})"
+        # plain reference in IRI position: assumed a correct IRI, NOT
+        # percent-encoded and NOT trimmed — the reference only strips
+        # FNML execution outputs (materializer.py:186); plain reference
+        # values are emitted verbatim, so whitespace-padded cells flow
+        # to the invalid-IRI data-error filter instead of being silently
+        # repaired (deliberate parity choice, round-4 advice)
         elif tm.termtype == M.LITERAL:
             e = ntriples_escape_sql(natural_mapping_sql(e, datatype))
         pieces.append(e)
@@ -211,77 +216,13 @@ def _term_sql(tm: M.TermMap, *, datatype: Optional[str] = None,
 def compile_term(tm: M.TermMap, *, datatype: Optional[str] = None,
                  col_prefix: str = "", wrap: bool = True,
                  base_iri: str = "") -> Column:
-    """Compile a term map to a Column producing the N-Triples lexical form.
-
-    Reference: materializer.py:106-163 (_materialize_template) — constants
-    and literal template parts are emitted verbatim; only *reference values*
-    are percent-encoded (IRI position) or natural-mapped + escaped (literal
-    position); then the whole term is termtype-wrapped. ``base_iri``
-    (document-driven mappings only) resolves relative IRI results.
-
-    Non-execution terms render as ONE SQL string parsed by a single
-    ``F.expr`` (:func:`_term_sql`) — same Catalyst tree, ~30× fewer py4j
-    round-trips; executions and non-ASCII safe-char modes keep the
-    Column path below.
-    """
+    """Column form of :func:`_term_sql`: one ``F.expr`` (one py4j
+    round-trip) per term; constants fold driver-side
+    (materializer.py:919-923)."""
     if tm.kind == M.CONSTANT:
-        # driver-side constant folding (materializer.py:919-923)
         return F.lit(_wrap_py(tm.value, tm.termtype) if wrap else tm.value)
-
-    if tm.kind != M.EXECUTION:
-        s = _term_sql(tm, datatype=datatype, col_prefix=col_prefix,
-                      wrap=wrap, base_iri=base_iri)
-        if s is not None:
-            return F.expr(s)
-
-    if tm.kind == M.EXECUTION:
-        # FNML function execution (reference: fnml_executer.py:69-122,
-        # _materialize_fnml_execution materializer.py:165-197): the
-        # function output is treated like a reference value — encoded /
-        # natural-mapped / escaped per termtype, then wrapped.
-        col, explodes = compile_execution(tm, col_prefix=col_prefix)
-        if explodes:
-            raise ValueError(
-                f"list-returning function {tm.value!r} must be exploded at "
-                "the rule level (object position only)")
-        if tm.termtype == M.IRI:
-            # "IRI values are assumed correct and NOT percent encoded",
-            # only trimmed (reference: materializer.py:183-186)
-            col = F.trim(col)
-            if base_iri:
-                col = _resolve_base(col, base_iri)
-        elif tm.termtype == M.LITERAL:
-            col = natural_mapping_col(col, datatype)
-            col = ntriples_escape_col(col)
-        return _wrap_col(col, tm.termtype) if wrap else col
-
-    template = tm.value if tm.kind == M.TEMPLATE else "{" + tm.value + "}"
-    parts, refs = _template_parts(template)
-
-    pieces: list[Column] = []
-    for part, ref in zip(parts, refs):
-        if part:
-            pieces.append(F.lit(part))
-        col = _ref_col(col_prefix + ref)
-        if tm.termtype == M.IRI and tm.kind == M.TEMPLATE:
-            col = percent_encode_col(col)
-        # plain reference in IRI position: assumed a correct IRI, NOT
-        # percent-encoded and NOT trimmed — the reference only strips
-        # FNML execution outputs (materializer.py:186); plain reference
-        # values are emitted verbatim, so whitespace-padded cells flow
-        # to the invalid-IRI data-error filter instead of being silently
-        # repaired (deliberate parity choice, round-4 advice)
-        elif tm.termtype == M.LITERAL:
-            col = natural_mapping_col(col, datatype)
-            col = ntriples_escape_col(col)
-        pieces.append(col)
-    if parts[-1]:
-        pieces.append(F.lit(parts[-1]))
-
-    term = pieces[0] if len(pieces) == 1 else F.concat(*pieces)
-    if tm.termtype == M.IRI and base_iri:
-        term = _resolve_base(term, base_iri)
-    return _wrap_col(term, tm.termtype) if wrap else term
+    return F.expr(_term_sql(tm, datatype=datatype, col_prefix=col_prefix,
+                            wrap=wrap, base_iri=base_iri))
 
 
 def compile_execution(tm: M.TermMap, col_prefix: str = ""):
@@ -318,54 +259,80 @@ def _wrap_py(value: str, termtype: str) -> str:
     return value
 
 
-def _wrap_col(col: Column, termtype: str) -> Column:
-    if termtype == M.IRI:
-        return F.concat(F.lit("<"), col, F.lit(">"))
-    if termtype == M.BLANK_NODE:
-        return F.concat(F.lit("_:"), col)
-    if termtype == M.LITERAL:
-        return F.concat(F.lit('"'), col, F.lit('"'))
-    return col
+def _object_sql(rule: M.Rule, col_prefix: str = "") -> str:
+    """Object term + optional @lang / ^^<datatype> suffix.
 
-
-def _object_sql(rule: M.Rule, col_prefix: str = "") -> str | None:
-    """SQL-string form of :func:`_object_column` (``None`` → Column path)."""
+    Reference: materializer.py:213-228.
+    """
     datatype_iri = (rule.datatype.value
                     if rule.datatype is not None and rule.datatype.kind == M.CONSTANT
                     else None)
     obj = _term_sql(rule.object, datatype=datatype_iri,
                     col_prefix=col_prefix, base_iri=rule.base_iri)
-    if obj is None:
-        return None
     if rule.language is not None:
-        lang = _term_sql(rule.language, wrap=False)
-        return None if lang is None else f"concat({obj}, '@', {lang})"
+        return f"concat({obj}, '@', {_term_sql(rule.language, wrap=False)})"
     if rule.datatype is not None:
         dt = _term_sql(rule.datatype.but(termtype=M.IRI))
-        return None if dt is None else f"concat({obj}, '^^', {dt})"
+        return f"concat({obj}, '^^', {dt})"
     return obj
 
 
 def _object_column(rule: M.Rule, col_prefix: str = "") -> Column:
-    """Object term + optional @lang / ^^<datatype> suffix.
+    return F.expr(_object_sql(rule, col_prefix))
 
-    Reference: materializer.py:213-228.
+
+# the term-map slots of a rule; quoted_* hold whole sub-rules
+_TERM_SLOTS = ("subject", "predicate", "object", "graph", "language",
+               "datatype", "parent_subject", "quoted_subject",
+               "quoted_object")
+
+
+def _project_execution(base: DataFrame, tm: Optional[M.TermMap], name: str,
+                       col_prefix: str = "", explode: bool = False
+                       ) -> tuple[DataFrame, Optional[M.TermMap]]:
+    """Project one FNML execution's output into the generated column
+    ``name`` of ``base``; return the frame and the term rewritten to
+    render that column (``value`` = ``name``, no args). Other terms pass
+    through unchanged.
+
+    ``explode``: a list-returning function becomes one row per element
+    (reference: fnml_executer.py:120 ``data.explode(fnml_execution)``),
+    rendered as a plain reference value; elsewhere it is an error.
     """
-    s = _object_sql(rule, col_prefix)
-    if s is not None:
-        return F.expr(s)
-    datatype_iri = (rule.datatype.value
-                    if rule.datatype is not None and rule.datatype.kind == M.CONSTANT
-                    else None)
-    obj = compile_term(rule.object, datatype=datatype_iri,
-                       col_prefix=col_prefix, base_iri=rule.base_iri)
-    if rule.language is not None:
-        lang = compile_term(rule.language, wrap=False)
-        obj = F.concat(obj, F.lit("@"), lang)
-    elif rule.datatype is not None:
-        dt = compile_term(rule.datatype.but(termtype=M.IRI))
-        obj = F.concat(obj, F.lit("^^"), dt)
-    return obj
+    if tm is None or tm.kind != M.EXECUTION:
+        return base, tm
+    col, explodes = compile_execution(tm, col_prefix=col_prefix)
+    if not explodes:
+        return base.withColumn(name, col), tm.but(value=name, args=())
+    if not explode:
+        raise ValueError(
+            f"list-returning function {tm.value!r} must be exploded at the "
+            "rule level (object position only)")
+    base = base.withColumn(name, F.explode(col)).na.drop("any", subset=[name])
+    return base, tm.but(kind=M.REFERENCE, value=name, args=())
+
+
+def _project_executions(base: DataFrame, rule: M.Rule,
+                        prefixes: dict[str, str],
+                        tag: str = "__fn_") -> tuple[DataFrame, M.Rule]:
+    """:func:`_project_execution` over every term-map slot of ``rule``,
+    quoted sub-rules included. ``prefixes`` maps a slot to the column
+    prefix its function arguments resolve over (a quoted sub-rule: all of
+    its terms); absent slots use ``""``. Only the top-level object may
+    explode."""
+    changes = {}
+    for slot in _TERM_SLOTS:
+        tm = getattr(rule, slot)
+        prefix = prefixes.get(slot, "")
+        if isinstance(tm, M.Rule):
+            base, changes[slot] = _project_executions(
+                base, tm, dict.fromkeys(_TERM_SLOTS, prefix),
+                f"{tag}{slot}_")
+        else:
+            base, changes[slot] = _project_execution(
+                base, tm, tag + slot, prefix,
+                explode=slot == "object" and tag == "__fn_")
+    return base, rule.but(**changes)
 
 
 def compile_rule(spark: SparkSession, rule: M.Rule,
@@ -433,11 +400,19 @@ def compile_rule(spark: SparkSession, rule: M.Rule,
                                  rule.subject_join_conditions)
         subj_prefix = "parent_"
 
+    # FNML executions → generated columns the renderers read
+    base, rule = _project_executions(base, rule, {
+        "parent_subject": col_prefix, "quoted_object": col_prefix,
+        "quoted_subject": subj_prefix})
+
     # data-error filtering (document-driven rules only): IRI terms built
     # from raw reference/function values may contain characters illegal in
     # IRIs — those rows are omitted, not emitted (R2RML term-generation
     # rules; W3C RMLTC0019b). Template refs are percent-encoded so they
-    # cannot produce invalid characters.
+    # cannot produce invalid characters. The raw value is the unwrapped,
+    # unresolved term: verbatim for references, trimmed for executions
+    # (materializer.py:186), so a whitespace-padded but otherwise valid
+    # function output survives while a padded reference cell does not.
     if rule.base_iri:
         for tm, prefix in ((rule.subject, subj_prefix),
                            (rule.predicate, ""),
@@ -447,23 +422,9 @@ def compile_rule(spark: SparkSession, rule: M.Rule,
                             "parent_" if rule.parent_source is not None else "")):
             if tm is not None and tm.termtype == M.IRI \
                     and tm.kind in (M.REFERENCE, M.EXECUTION):
-                raw_sql = None if tm.kind == M.EXECUTION else _term_sql(
-                    tm.but(termtype=""), wrap=False, col_prefix=prefix)
-                if raw_sql is not None:
-                    base = base.where(
-                        f"NOT ({raw_sql} RLIKE "
-                        f"{sql_str(_INVALID_IRI_CHARS_RE)})")
-                    continue
-                raw = compile_term(tm.but(termtype=""), wrap=False,
-                                   col_prefix=prefix)
-                if tm.kind == M.EXECUTION:
-                    # execution outputs ARE trimmed on emission
-                    # (materializer.py:186), so a whitespace-padded but
-                    # otherwise valid value must survive this filter;
-                    # plain references are emitted verbatim and padded
-                    # values are data errors
-                    raw = F.trim(raw)
-                base = base.where(~raw.rlike(_INVALID_IRI_CHARS_RE))
+                raw_sql = _term_sql(tm, wrap=False, col_prefix=prefix)
+                base = base.where(
+                    f"NOT ({raw_sql} RLIKE {sql_str(_INVALID_IRI_CHARS_RE)})")
 
     # --- term columns ------------------------------------------------------
     if rule.quoted_subject is not None:
@@ -473,29 +434,17 @@ def compile_rule(spark: SparkSession, rule: M.Rule,
 
     pred = compile_term(rule.predicate, base_iri=rule.base_iri)
 
-    # list-returning FNML execution in object position → row explode
-    # (reference: fnml_executer.py:120 ``data.explode(fnml_execution)``)
-    if rule.object is not None and rule.object.kind == M.EXECUTION:
-        col, explodes = compile_execution(rule.object, col_prefix="")
-        if explodes:
-            base = base.withColumn("__fnml", F.explode(col)) \
-                       .na.drop("any", subset=["__fnml"])
-            rule = rule.but(object=rule.object.but(
-                kind=M.REFERENCE, value="__fnml", args=()))
-
     if rule.quoted_object is not None:
         # with a join condition the quoted rule materializes over ITS OWN
         # source (joined in as parent_); without one it shares the
         # child's rows (reference: materializer.py:925-962)
         obj = _quoted_triple_col(rule.quoted_object, col_prefix=col_prefix)
-    elif rule.parent_source is not None and rule.join_conditions:
-        # referencing object map: object = parent subject over parent_ cols
-        obj = compile_term(rule.parent_subject, col_prefix="parent_",
-                           base_iri=rule.base_iri)
     elif rule.parent_subject is not None:
-        # join-less referencing map after self-join elimination: parent
-        # subject map evaluated over the child's own rows
-        obj = compile_term(rule.parent_subject, base_iri=rule.base_iri)
+        # referencing object map: object = parent subject, over parent_
+        # cols after a join, else (self-join eliminated) over the child's
+        # own rows
+        obj = compile_term(rule.parent_subject, col_prefix=col_prefix,
+                           base_iri=rule.base_iri)
     else:
         obj = _object_column(rule, col_prefix="")
 
@@ -584,15 +533,17 @@ def _compile_gather_rule(spark: SparkSession, rule: M.Rule,
         all_refs = list(dict.fromkeys(scalar_refs + list(g.references)))
         base = prepare_source(df, all_refs, na_values=na_values, dedup=True,
                               drop_null_subset=scalar_refs)
+        base, subject = _project_execution(base, rule.subject, "__fn_subject")
+        base, head = _project_execution(base, g.head, "__fn_head")
         return gather_triples(
             base,
-            subject_col=compile_term(rule.subject),
+            subject_col=compile_term(subject),
             predicate_iri=rule.predicate.value,
             gather_refs=list(g.references),
             gather_as=g.gather_as,
             value_termtype=g.value_termtype,
             value_datatype=g.value_datatype,
-            head_col=compile_term(g.head) if g.head is not None else None,
+            head_col=compile_term(head) if head is not None else None,
             allow_empty=g.allow_empty,
         )
 
@@ -630,25 +581,33 @@ def _compile_gather_rule(spark: SparkSession, rule: M.Rule,
         # (the reference's preprocess drop_duplicates on (key, value))
         vals = F.array_distinct(F.col(gv_cols[0]))
 
-    head_col = compile_term(g.head) if g.head is not None else None
+    base, head = _project_execution(base, g.head, "__fn_head")
+    head_col = compile_term(head) if head is not None else None
     if subject_position:
-        poms = tuple(
-            (compile_term(p, base_iri=rule.base_iri),
-             _object_column(rule.but(object=o, datatype=dt, language=lang)))
-            for (p, o, dt, lang) in rule.gather_poms)
+        poms = []
+        for i, pom in enumerate(rule.gather_poms):
+            terms = []
+            for j, tm in enumerate(pom):
+                base, tm = _project_execution(base, tm, f"__fn_pom{i}_{j}")
+                terms.append(tm)
+            p, o, dt, lang = terms
+            poms.append((compile_term(p, base_iri=rule.base_iri),
+                         _object_column(rule.but(object=o, datatype=dt,
+                                                 language=lang))))
         return gather_triples_per_row(
-            base, vals, g.gather_as, head_col=head_col, poms=poms,
+            base, vals, g.gather_as, head_col=head_col, poms=tuple(poms),
             value_termtype=g.value_termtype, value_datatype=g.value_datatype,
             allow_empty=g.allow_empty)
+    base, subject = _project_execution(base, rule.subject, "__fn_subject")
     return gather_triples_per_row(
         base, vals, g.gather_as, head_col=head_col,
-        subject_col=compile_term(rule.subject, base_iri=rule.base_iri),
+        subject_col=compile_term(subject, base_iri=rule.base_iri),
         predicate_iri=rule.predicate.value,
         value_termtype=g.value_termtype, value_datatype=g.value_datatype,
         allow_empty=g.allow_empty)
 
 
-def _quoted_triple_col(sub_rule: M.Rule, col_prefix: str = "") -> Column:
+def _quoted_triple_sql(sub_rule: M.Rule, col_prefix: str = "") -> str:
     """RML-star quoted triple ``<< s p o >>``, recursively nested.
 
     Reference: materializer.py:925-962 — with no join condition the
@@ -657,29 +616,6 @@ def _quoted_triple_col(sub_rule: M.Rule, col_prefix: str = "") -> Column:
     Nested quoting (a quoted rule whose own subject/object is quoted,
     RMLSTARTC004a shape) recurses over the same rows.
     """
-    s_sql = _quoted_triple_sql(sub_rule, col_prefix=col_prefix)
-    if s_sql is not None:
-        return F.expr(s_sql)
-    if sub_rule.quoted_subject is not None:
-        s = _quoted_triple_col(sub_rule.quoted_subject, col_prefix=col_prefix)
-    else:
-        s = compile_term(sub_rule.subject, col_prefix=col_prefix,
-                         base_iri=sub_rule.base_iri)
-    p = compile_term(sub_rule.predicate, col_prefix=col_prefix,
-                     base_iri=sub_rule.base_iri)
-    if sub_rule.quoted_object is not None:
-        if sub_rule.join_conditions:
-            raise NotImplementedError(
-                "join condition inside a *nested* quoted map is unsupported")
-        o = _quoted_triple_col(sub_rule.quoted_object, col_prefix=col_prefix)
-    else:
-        o = _object_column(sub_rule, col_prefix=col_prefix)
-    return F.concat(F.lit("<< "), s, F.lit(" "), p, F.lit(" "), o, F.lit(" >>"))
-
-
-def _quoted_triple_sql(sub_rule: M.Rule, col_prefix: str = "") -> str | None:
-    """SQL-string form of :func:`_quoted_triple_col` (``None`` → Column
-    path, e.g. FNML executions inside the quoted map)."""
     if sub_rule.quoted_subject is not None:
         s = _quoted_triple_sql(sub_rule.quoted_subject, col_prefix=col_prefix)
     else:
@@ -694,9 +630,11 @@ def _quoted_triple_sql(sub_rule: M.Rule, col_prefix: str = "") -> str | None:
         o = _quoted_triple_sql(sub_rule.quoted_object, col_prefix=col_prefix)
     else:
         o = _object_sql(sub_rule, col_prefix=col_prefix)
-    if s is None or p is None or o is None:
-        return None
     return f"concat('<< ', {s}, ' ', {p}, ' ', {o}, ' >>')"
+
+
+def _quoted_triple_col(sub_rule: M.Rule, col_prefix: str = "") -> Column:
+    return F.expr(_quoted_triple_sql(sub_rule, col_prefix))
 
 
 def materialize_rules(spark: SparkSession, rules: list[M.Rule],

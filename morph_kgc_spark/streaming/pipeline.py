@@ -3,8 +3,9 @@
 The reference has no true streaming (its Kafka sink is a one-shot batch
 message, utils.py:300-330). This module goes further, per the brief's
 streaming mandate: the same rule compiler runs over an unbounded pages
-stream — every term-materialization operator is stateless/per-row, so
-the exact batch Column trees apply unchanged to ``readStream`` sources.
+stream — source preparation, FNML projection and term rendering are
+stateless/per-row, so the batch compiler's helpers apply unchanged to
+``readStream`` sources.
 
 - ``stream_triples``: rules × streaming DataFrame → streaming triples.
   Set semantics caveat: global distinct over an unbounded stream needs
@@ -24,8 +25,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from morph_kgc_spark import model as M
+from morph_kgc_spark.functions.sqlexpr import sql_ident
 from morph_kgc_spark.operators.joins import join_child_parent
-from morph_kgc_spark.plans.compiler import compile_term, _object_column, prepare_source
+from morph_kgc_spark.plans.compiler import (
+    _object_sql,
+    _project_executions,
+    _term_sql,
+    prepare_source,
+)
 
 
 def stream_triples(stream_df: DataFrame, rules: list[M.Rule],
@@ -61,11 +68,16 @@ def stream_triples(stream_df: DataFrame, rules: list[M.Rule],
                     "stream rule joins need the parent as a static frame: "
                     f"pass static_parents[{rule.parent_source.value!r}]")
 
+        # the batch source preparation (str-coerce, na_values, null-drop);
+        # the event time rides along as epoch microseconds, which survive
+        # the string coercion exactly and in any session time zone
         refs = rule.references
-        base = stream_df
-        for r in refs:
-            base = base.withColumn(r, F.col(r).cast("string"))
-        base = base.na.drop("any", subset=refs) if refs else base
+        base, keep = stream_df, list(refs)
+        if event_time_col:
+            base = base.withColumn("__event_time", F.expr(
+                f"unix_micros({sql_ident(event_time_col)})"))
+            keep.append("__event_time")
+        base = prepare_source(base, keep, dedup=False, drop_null_subset=refs)
 
         col_prefix = ""
         if parent is not None:
@@ -76,19 +88,19 @@ def stream_triples(stream_df: DataFrame, rules: list[M.Rule],
                 rule.join_conditions, broadcast=True)
             col_prefix = "parent_"
 
-        if col_prefix and rule.parent_subject is not None:
-            obj = compile_term(rule.parent_subject, col_prefix=col_prefix)
-        elif rule.parent_subject is not None:
-            obj = compile_term(rule.parent_subject)  # self-join eliminated
-        else:
-            obj = _object_column(rule)
+        base, rule = _project_executions(
+            base, rule, {"parent_subject": col_prefix})
+        obj = (_term_sql(rule.parent_subject, col_prefix=col_prefix)
+               if rule.parent_subject is not None else _object_sql(rule))
         cols = [
-            compile_term(rule.subject).alias("subject"),
-            compile_term(rule.predicate).alias("predicate"),
-            obj.alias("object"),
+            F.expr(_term_sql(rule.subject)).alias("subject"),
+            F.expr(_term_sql(rule.predicate)).alias("predicate"),
+            F.expr(obj).alias("object"),
         ]
         if event_time_col:
-            cols.append(F.col(event_time_col).alias("__event_time"))
+            cols.append(F.expr(
+                "timestamp_micros(CAST(__event_time AS BIGINT))"
+            ).alias("__event_time"))
         branch = base.select(*cols)
         out = branch if out is None else out.unionAll(branch)
 

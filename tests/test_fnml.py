@@ -136,7 +136,7 @@ def test_controls_if_evaluates_expressions(spark):
     }
 
 
-def test_function_in_predicate_position(spark):
+def test_concat_function_in_predicate_position(spark):
     """Executions compile in predicate position too (IRI termtype)."""
     from morph_kgc_spark.functions.builtins import IDLAB
 
@@ -151,6 +151,37 @@ def test_function_in_predicate_position(spark):
         object=M.TermMap(M.CONSTANT, EX + "o", M.IRI))
     [r] = compile_rule(spark, rule, reg).collect()
     assert r.predicate == f"<{EX}knows>"
+
+
+def test_execution_iri_trimmed_resolved_and_filtered(spark):
+    """An IRI-valued execution output is trimmed, never percent-encoded,
+    and resolved against the document base when relative; the invalid-IRI
+    filter sees the trimmed value, so padding survives and an internal
+    space is a data error (reference materializer.py:183-186)."""
+    reg = _reg(spark, pd.DataFrame({
+        "ID": ["1", "2", "3"], "v": [" Rel/A ", "HTTP://X.ORG/ABS", "BAD V"]}))
+    obj = M.TermMap(M.EXECUTION, GREL + "toLowerCase", M.IRI,
+                    args=(("string", M.TermMap(M.REFERENCE, "v")),))
+    rows = compile_rule(spark, _rule(obj, base_iri=EX + "base/"),
+                        reg).collect()
+    assert sorted(r.object for r in rows) == [
+        f"<{EX}base/rel/a>", "<http://x.org/abs>"]
+
+
+def test_execution_inside_quoted_map(spark):
+    """RML-star: an execution in a quoted triples map renders over the
+    rows the quoted map shares with its parent rule."""
+    reg = _reg(spark, pd.DataFrame({"ID": ["1"], "Name": ["ana"]}))
+    quoted = _rule(M.TermMap(M.EXECUTION, GREL + "toUpperCase", M.LITERAL,
+                             args=(("string", M.TermMap(M.REFERENCE,
+                                                        "Name")),)))
+    rule = M.Rule(
+        source=M.Source("df", "t"),
+        subject=M.TermMap(M.TEMPLATE, EX + "{ID}", M.IRI),
+        predicate=M.TermMap(M.CONSTANT, EX + "claims", M.IRI),
+        quoted_object=quoted)
+    [r] = compile_rule(spark, rule, reg).collect()
+    assert r.object == f'<< <{EX}1> <{EX}p> "ANA" >>'
 
 
 def test_load_udfs_from_file(spark, tmp_path):

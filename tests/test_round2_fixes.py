@@ -38,7 +38,8 @@ def test_percent_encode_col_matches_quote(spark):
 
 def test_percent_encode_col_safe_mode_matches_quote(spark):
     df = spark.createDataFrame([(s,) for s in NASTY], ["v"])
-    for safe in ("/", "/:#", "+* ~%"):
+    # non-ASCII safe characters: quote() drops them from ``safe``
+    for safe in ("/", "/:#", "+* ~%", "é/", "/é:"):
         rows = df.select(
             "v", percent_encode_col(F.col("v"), safe=safe).alias("e")).collect()
         for r in rows:
@@ -52,6 +53,29 @@ def test_percent_encode_is_jvm_side(spark):
     explained = plan._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in explained
     assert "BatchEvalPython" not in explained
+
+
+def test_non_ascii_safe_encoding_plans_no_python(spark):
+    """A non-ASCII safe_percent_encoding character does not put a Python
+    UDF into the plan: quote() ignores it, so the JVM chain suffices."""
+    from morph_kgc_spark.sources.registry import default_registry
+
+    rule = M.Rule(
+        source=M.Source("df", "mem"),
+        subject=M.TermMap(M.TEMPLATE, EX + "{v}", M.IRI),
+        predicate=M.TermMap(M.CONSTANT, EX + "p", M.IRI),
+        object=M.TermMap(M.CONSTANT, "o", M.LITERAL),
+    )
+    reg = default_registry()
+    reg.register("mem", spark.createDataFrame(
+        [(s,) for s in NASTY if s], ["v"]))
+    out = materialize(spark, [rule], registry=reg,
+                      safe_percent_encoding="é/")
+    explained = out._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in explained
+    assert "BatchEvalPython" not in explained
+    got = sorted(r.subject for r in out.collect())
+    assert got == sorted(f"<{EX}{quote(v, safe='/')}>" for v in NASTY if v)
 
 
 # ---------------------------------------------------------------------------

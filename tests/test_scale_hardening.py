@@ -295,6 +295,31 @@ def test_simhash_contraction_parity(spark, monkeypatch):
     assert contracted == direct
 
 
+def test_simhash_count_shortcut_bounds_all_bands(spark, monkeypatch):
+    """The corpus-count shortcut may skip the band probe only when
+    n_bands·n(n−1)/2 — the probe's worst case over ALL bands — fits the
+    contraction threshold. 40 copies of one text: 780 raw pairs fit
+    1000, but 7 bands × 780 = 5460 candidates do not, so the contracted
+    (dense) path must run — and it finds the single cluster."""
+    from morph_kgc_spark.operators import dedup as D
+
+    monkeypatch.setenv("MORPH_KGC_SIMHASH_CONTRACT_MIN_CANDS", "1000")
+    seen = []
+    real = D.dup_clusters
+
+    def spy(*args, **kw):
+        seen.append(kw.get("dense"))
+        return real(*args, **kw)
+
+    monkeypatch.setattr(D, "dup_clusters", spy)
+    docs = spark.createDataFrame(
+        [(i, "the same small text") for i in range(40)], "doc_id long, text string")
+    rows = _cluster_rows(
+        D.simhash_dup_clusters(docs, "doc_id", "text", max_hamming=6))
+    assert seen == [True]
+    assert {c for _, c in rows} == {0} and len(rows) == 40
+
+
 def test_dup_clusters_dense_mode_parity(spark, monkeypatch):
     """dense=True (single-direction edges, both-side per-round
     aggregates) and the dense=None staging decision must yield the

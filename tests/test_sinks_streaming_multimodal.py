@@ -65,6 +65,29 @@ def test_streaming_rules_end_to_end(spark, tmp_path):
     }
 
 
+def test_stream_triples_honours_na_values(spark):
+    """stream_triples prepares its source like batch compile_rule: the
+    default NA lexical forms ('' and 'nan') null their rows out."""
+    from morph_kgc_spark.plans.compiler import compile_rule
+    from morph_kgc_spark.sources.registry import default_registry
+    from morph_kgc_spark.streaming.pipeline import stream_triples
+
+    df = spark.createDataFrame(
+        [("1", "ana"), ("2", ""), ("3", "nan"), ("4", None)],
+        "ID string, Name string")
+    rule = M.Rule(
+        source=M.Source("df", "t"),
+        subject=M.TermMap(M.TEMPLATE, EX + "{ID}", M.IRI),
+        predicate=M.TermMap(M.CONSTANT, EX + "name", M.IRI),
+        object=M.TermMap(M.REFERENCE, "Name", M.LITERAL),
+    )
+    reg = default_registry()
+    reg.register("t", df)
+    batch = {tuple(r) for r in compile_rule(spark, rule, reg).collect()}
+    streamed = {tuple(r) for r in stream_triples(df, [rule]).collect()}
+    assert streamed == batch == {(f"<{EX}1>", f"<{EX}name>", '"ana"')}
+
+
 def test_streaming_rejects_joins(spark):
     from morph_kgc_spark.streaming.pipeline import stream_triples
 

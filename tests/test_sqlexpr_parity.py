@@ -1,18 +1,20 @@
-"""The SQL-string expression twins (functions/sqlexpr.py) must stay
-byte-equivalent to the Column builders they replaced on the default
-plan-build path — pinned here with Hypothesis over adversarial strings
-(quotes, backslashes, control chars, unicode)."""
+"""The SQL-string term encodings (functions/sqlexpr.py) — the only term
+renderer — must stay byte-equivalent to the pure-Python references
+(``urllib.parse.quote`` as falcon's ``encode_value``, the reference's
+N-Triples escape order, R2RML natural mapping) — pinned here with
+Hypothesis over adversarial strings (quotes, backslashes, control
+chars, unicode)."""
 
 from __future__ import annotations
+
+from urllib.parse import quote
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from morph_kgc_spark.functions.encoding import (
-    ntriples_escape_col,
     ntriples_escape_py,
-    percent_encode_col,
     percent_encode_py,
 )
 from morph_kgc_spark.functions.sqlexpr import (
@@ -51,51 +53,50 @@ def test_sql_str_literal_roundtrip(spark, vals):
 
 @settings(max_examples=15, deadline=None)
 @given(st.lists(st.one_of(_texts, _nasty), min_size=1, max_size=8))
-def test_percent_encode_sql_matches_col_and_python(spark, vals):
+def test_percent_encode_sql_matches_python(spark, vals):
     rows = _eval_exprs(spark, vals, lambda: [
         F.col("s"),
-        percent_encode_col(F.col("s")).alias("col_form"),
         F.expr(percent_encode_sql("`s`")).alias("sql_form"),
+        F.expr(percent_encode_sql("`s`", "/é:")).alias("safe_form"),
     ])
     for r in rows:
-        assert r.col_form == r.sql_form == percent_encode_py(r.s)
+        assert r.sql_form == percent_encode_py(r.s)
+        # quote() drops non-ASCII safe characters, so 'é' is encoded
+        assert r.safe_form == quote(r.s, safe="/é:")
 
 
 @settings(max_examples=15, deadline=None)
 @given(st.lists(st.one_of(_texts, _nasty), min_size=1, max_size=8))
-def test_ntriples_escape_sql_matches_col_and_python(spark, vals):
+def test_ntriples_escape_sql_matches_python(spark, vals):
     rows = _eval_exprs(spark, vals, lambda: [
         F.col("s"),
-        ntriples_escape_col(F.col("s")).alias("col_form"),
         F.expr(ntriples_escape_sql("`s`")).alias("sql_form"),
     ])
     for r in rows:
-        assert r.col_form == r.sql_form == ntriples_escape_py(r.s)
+        assert r.sql_form == ntriples_escape_py(r.s)
 
 
-def test_natural_mapping_sql_matches_col(spark):
+def test_natural_mapping_sql_expected_values(spark):
     from morph_kgc_spark import model as M
-    from morph_kgc_spark.functions.encoding import natural_mapping_col
 
     cases = {
-        M.XSD_BOOLEAN: ["TRUE", "False", "1"],
-        M.XSD_DATETIME: ["2024-01-01 10:20:30", "x y z"],
-        M.XSD_INTEGER: ["30.0", "7", "-2.0"],
-        None: ["anything 30.0"],
+        M.XSD_BOOLEAN: {"TRUE": "true", "False": "false", "1": "1"},
+        M.XSD_DATETIME: {"2024-01-01 10:20:30": "2024-01-01T10:20:30",
+                         "x y z": "xTyTz"},
+        M.XSD_INTEGER: {"30.0": "30", "7": "7", "-2.0": "-2"},
+        None: {"anything 30.0": "anything 30.0"},
     }
-    for dt, vals in cases.items():
-        df = spark.createDataFrame([(v,) for v in vals], "s string")
+    for dt, expected in cases.items():
+        df = spark.createDataFrame([(v,) for v in expected], "s string")
         rows = df.select(
-            natural_mapping_col(F.col("s"), dt).alias("col_form"),
-            F.expr(natural_mapping_sql("`s`", dt)).alias("sql_form"),
+            "s", F.expr(natural_mapping_sql("`s`", dt)).alias("sql_form"),
         ).collect()
-        for r in rows:
-            assert r.col_form == r.sql_form, (dt, vals)
+        assert {r.s: r.sql_form for r in rows} == expected, dt
 
 
 def test_compiled_template_term_end_to_end(spark):
-    """compile_term's F.expr fast path renders the same bytes the
-    reference's falcon-encode + wrap produce (driver replica)."""
+    """compile_term renders the same bytes the reference's
+    falcon-encode + wrap produce (driver replica)."""
     from morph_kgc_spark import model as M
     from morph_kgc_spark.plans.compiler import compile_term
 
