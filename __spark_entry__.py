@@ -543,11 +543,10 @@ def q_dedup_clusters(spark, sf_dir):
     """Near-dup clustering: connected components (min-label propagation)
     over banded SimHash pairs — the keep-one-per-cluster dedup policy."""
     docs = _read(spark, sf_dir, "documents")
-    # signature-contracted composition (round 7): identical output to
-    # simhash_pairs -> dup_clusters — equal-signature docs contract into
-    # their min-id representative before the banded pair join — but the
-    # dup graph shrinks by the duplicate-signature mass, which is what
-    # keeps the dense sf1.0 corpus (164M raw pairs) inside memory
+    # identical output to simhash_pairs -> dup_clusters, but equal-
+    # signature docs contract into their min-id representative before
+    # the banded pair join, so the dup graph loses every intra-class
+    # pair (the dense sf1.0 corpus: 164M raw pairs become 54M)
     return D.simhash_dup_clusters(docs, "doc_id", "text", max_hamming=6)
 
 

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from morph_kgc_spark import model as M
 from morph_kgc_spark.functions.encoding import safe_encoding_context
+from morph_kgc_spark.operators.cache import own
 from morph_kgc_spark.plans.compiler import DEFAULT_NA_VALUES, materialize_rules
 from morph_kgc_spark.plans.partitioner import assign_mapping_partitions
 from morph_kgc_spark.sources.registry import SourceRegistry, default_registry
@@ -41,6 +42,10 @@ def materialize(spark: SparkSession,
     columns (reference config.py:81, default ['', 'nan']);
     ``safe_percent_encoding`` lists characters exempted from IRI
     percent-encoding (reference config.py:228).
+
+    With a ``persist_sources`` registry the returned frame owns the
+    persisted sources its rules read: ``operators.cache.release`` on it
+    frees them.
     """
     registry = registry or default_registry()
 
@@ -53,8 +58,15 @@ def materialize(spark: SparkSession,
     if partition_rules:
         rules = assign_mapping_partitions(rules)
 
+    read: list[DataFrame] = []
+
+    def load(session: SparkSession, source: M.Source) -> DataFrame:
+        read.append(registry(session, source))
+        return read[-1]
+
     # plan construction is driver-side eager, so the contextvar scope
     # covers every IRI template reference the compiler renders
     with safe_encoding_context(safe_percent_encoding):
-        return materialize_rules(spark, rules, registry, distinct=distinct,
-                                 na_values=tuple(na_values))
+        out = materialize_rules(spark, rules, load, distinct=distinct,
+                                na_values=tuple(na_values))
+    return own(out, read) if registry.persist_sources else out

@@ -26,11 +26,14 @@ from pyspark.sql import DataFrame, functions as F
 from morph_kgc_spark.functions.hashing import h64
 from morph_kgc_spark.operators.dedup import shingle_arrays, shingles
 
+# benchmark document count up to which decontaminate's default regime
+# intersects a broadcast shingle array (above: broadcast hash join)
+_DECONTAM_MAX_ARRAY_DOCS = 1000
+
 
 def decontaminate(corpus: DataFrame, bench: DataFrame, id_col: str,
                   text_col: str, n: int = 3, min_hit: int = 5,
-                  broadcast_array: bool | None = None,
-                  max_array_shingles: int | None = None) -> DataFrame:
+                  broadcast_array: bool | None = None) -> DataFrame:
     """Per-corpus-doc benchmark n-gram overlap:
     (id, n_grams, n_hit, contaminated).
 
@@ -50,30 +53,24 @@ def decontaminate(corpus: DataFrame, bench: DataFrame, id_col: str,
       posting stream against the benchmark shingles + one re-group by
       id. Same result; per-posting cost is O(1) regardless of
       benchmark size.
-    - ``broadcast_array=None`` (default, round 7): decided from the
-      benchmark's DOCUMENT count (one cheap count on the SMALL side —
-      a distinct-shingle probe would be exact but measured ~0.7 s of
-      pure probe overhead where the whole sf0.1 query is 0.6 s): the
-      array regime up to ``max_array_shingles`` benchmark DOCS (env
-      MORPH_KGC_DECONTAM_MAX_ARRAY_DOCS, default 1000), the hash join
-      above. Rationale for the crossover: ``array_intersect`` rebuilds
-      the benchmark hash set PER CORPUS ROW, so its cost is
-      corpus_docs × benchmark_shingles — at sf1.0 (2.5k benchmark docs
-      ≈ 27k shingles × 47.5k corpus docs) the array regime took
-      10.6 s where the hash join takes ~2 s; at sf0.1 (250 benchmark
-      docs ≈ 9.8k shingles) the array regime wins. Both regimes
-      produce identical rows (pinned by tests/test_curation.py's
+    - ``broadcast_array=None`` (default): decided from the benchmark's
+      DOCUMENT count (one cheap count on the SMALL side — a
+      distinct-shingle probe would be exact but measured ~0.7 s of pure
+      probe overhead where the whole sf0.1 query is 0.6 s): the array
+      regime up to ``_DECONTAM_MAX_ARRAY_DOCS`` (1000) benchmark docs,
+      the hash join above. Rationale for the crossover:
+      ``array_intersect`` rebuilds the benchmark hash set PER CORPUS
+      ROW, so its cost is corpus_docs × benchmark_shingles — at sf1.0
+      (2.5k benchmark docs ≈ 27k shingles × 47.5k corpus docs) the
+      array regime took 10.6 s where the hash join takes ~2 s; at sf0.1
+      (250 benchmark docs ≈ 9.8k shingles) the array regime wins. Both
+      regimes produce identical rows (pinned by tests/test_curation.py's
       parity test and the oracle hash).
     """
-    import os
-
     grams = shingle_arrays(corpus, id_col, text_col, n)
     bench_sh = shingles(bench, id_col, text_col, n).select("shingle")
     if broadcast_array is None:
-        if max_array_shingles is None:
-            max_array_shingles = int(os.environ.get(
-                "MORPH_KGC_DECONTAM_MAX_ARRAY_DOCS", "1000"))
-        broadcast_array = bench.count() <= max_array_shingles
+        broadcast_array = bench.count() <= _DECONTAM_MAX_ARRAY_DOCS
     if broadcast_array:
         # collect_set already deduplicates — a .distinct() here would
         # add a second full aggregate+exchange over the benchmark

@@ -570,9 +570,17 @@ def ngram_capped_pairs(df: DataFrame, id_col: str, text_col: str,
     return out if lazy else out.localCheckpoint()
 
 
+# dup-graph node count up to which every CC round joins against a
+# broadcast label table (1M rows ≈ tens of MB); above it the rounds
+# shuffle-join, the 100 TB shape
+_CC_BROADCAST_MAX_NODES = 1_000_000
+# stored pair count up to which CC keeps both edge orientations (see the
+# edge-storage note in dup_clusters)
+_CC_DUAL_EDGE_MAX = 25_000_000
+
+
 def dup_clusters(ids: DataFrame, pairs: DataFrame, id_col: str,
                  max_iterations: int = 50,
-                 broadcast_max_nodes: int | None = None,
                  dense: bool | None = None) -> DataFrame:
     """Connected components over near-dup pairs → (id, cluster_id).
 
@@ -598,29 +606,23 @@ def dup_clusters(ids: DataFrame, pairs: DataFrame, id_col: str,
     (two broadcast-able semi-joins, paid once), so the output has
     exactly one row per input id and every cluster_id is an input id.
 
-    Round-7 plan shape (guide §2.4/§3.1): the pair stream is read
-    ONCE; the edge table is hash-partitioned on ``dst`` exactly once,
-    then checkpointed WITH that partitioning (sparse/dense storage
-    tiering is documented at the decision site below). The label table
-    is one row per dup-graph node, known exactly after one count; when
-    it fits a broadcast (``broadcast_max_nodes``, default 1M rows ≈
-    tens of MB, env MORPH_KGC_CC_BROADCAST_MAX_NODES), every per-round
-    join is a map-side BroadcastHashJoin and the dst-side neighbor-min
-    aggregate reuses the edges' partitioning — ZERO exchanges per
-    sparse-mode round. Above the threshold the rounds fall back to
-    shuffle joins (the 100 TB shape). The fixpoint — and therefore the
-    output — is identical in every mode; only storage layout and join
-    strategy differ (the decisions AQE would make from runtime sizes,
-    taken here from exact counts because checkpointed RDDs carry no
-    size statistics).
+    Plan shape: the pair stream is read ONCE; the edge table is
+    hash-partitioned on ``dst`` exactly once, then checkpointed WITH
+    that partitioning. ``dense`` picks the edge layout (both
+    orientations when False, one when True; ``None`` decides from a
+    staging count against ``_CC_DUAL_EDGE_MAX`` — see the note at the
+    decision site). The label table is one row per dup-graph node,
+    known exactly after one count; up to ``_CC_BROADCAST_MAX_NODES``
+    rows every per-round join is a map-side BroadcastHashJoin and the
+    dst-side neighbor-min aggregate reuses the edges' partitioning —
+    ZERO exchanges per sparse-mode round. Above it the rounds fall back
+    to shuffle joins (the 100 TB shape). The fixpoint — and therefore
+    the output — is identical in every mode; only storage layout and
+    join strategy differ (the decisions AQE would make from runtime
+    sizes, taken here from exact counts because checkpointed RDDs
+    carry no size statistics).
     """
-    import os
-
     from morph_kgc_spark.operators.cache import release
-
-    if broadcast_max_nodes is None:
-        broadcast_max_nodes = int(os.environ.get(
-            "MORPH_KGC_CC_BROADCAST_MAX_NODES", "1000000"))
 
     id_set = ids.select(F.col(id_col).alias("node"))
     pairs_in = (
@@ -631,18 +633,16 @@ def dup_clusters(ids: DataFrame, pairs: DataFrame, id_col: str,
     # EDGE STORAGE is tiered (round 7, sf1.0 hardening): the dense
     # synthetic corpus reaches 10^8 true pairs at sf1.0 and a doubled
     # (both orientations) edge checkpoint OOMed a 16 GB local heap.
-    # SPARSE graphs (≤ MORPH_KGC_CC_DUAL_EDGE_MAX stored pairs, default
-    # 25M) store both directions — per-round neighbor-min is then ONE
-    # partitioning-reusing aggregate; DENSE graphs keep a single
-    # direction (half the storage) and each round aggregates BOTH sides
-    # of it (two scans of half the data: same bytes read, two extra
-    # node-sized exchanges). ``dense=None`` decides from a staging
-    # checkpoint's exact count; callers that can bound the edge count
-    # up front (simhash_dup_clusters's banded candidate bound) pass the
-    # regime explicitly and skip the staging pass. The fixpoint — and
+    # SPARSE graphs (≤ _CC_DUAL_EDGE_MAX stored pairs) store both
+    # directions — per-round neighbor-min is then ONE partitioning-
+    # reusing aggregate; DENSE graphs keep a single direction (half the
+    # storage) and each round aggregates BOTH sides of it (two scans of
+    # half the data: same bytes read, two extra node-sized exchanges).
+    # ``dense=None`` decides from a staging checkpoint's exact count;
+    # callers that can bound the edge count up front
+    # (simhash_dup_clusters's banded candidate bound) pass the regime
+    # explicitly and skip the staging pass. The fixpoint — and
     # therefore the output — is identical in every mode.
-    dual_edge_max = int(os.environ.get(
-        "MORPH_KGC_CC_DUAL_EDGE_MAX", "25000000"))
     n_parts = ids.sparkSession.sparkContext.defaultParallelism
     if dense is None:
         edges1 = (
@@ -651,7 +651,7 @@ def dup_clusters(ids: DataFrame, pairs: DataFrame, id_col: str,
             .repartition(n_parts, "dst")
             .localCheckpoint(eager=False)
         )
-        dense = edges1.count() > dual_edge_max
+        dense = edges1.count() > _CC_DUAL_EDGE_MAX
         src = edges1
     else:
         edges1 = None
@@ -696,8 +696,8 @@ def dup_clusters(ids: DataFrame, pairs: DataFrame, id_col: str,
         # the doubled table is materialized now — the single-direction
         # staging checkpoint is dead weight
         release(edges1)
-    bcast = (lambda df: F.broadcast(df)) if n_nodes <= broadcast_max_nodes \
-        else (lambda df: df)
+    bcast = (lambda df: F.broadcast(df)) \
+        if n_nodes <= _CC_BROADCAST_MAX_NODES else (lambda df: df)
 
     prev = labels
     for _ in range(max_iterations):
@@ -783,76 +783,49 @@ def simhash_dup_clusters(df: DataFrame, id_col: str, text_col: str,
                          max_hamming: int = 6, bits: int = 32,
                          n_bands: int | None = None) -> DataFrame:
     """Connected components over SimHash near-dup pairs — the
-    :func:`simhash_pairs` → :func:`dup_clusters` composition with a
-    density-adaptive EXACT signature contraction (round 7, sf1.0
-    hardening).
+    :func:`simhash_pairs` → :func:`dup_clusters` composition over
+    signature-CONTRACTED documents.
 
     Documents sharing an identical signature are pairwise linked by
     construction (equal signatures agree on every band and are at
-    hamming 0 ≤ max_hamming), so each signature-equivalence class can
-    contract into its min-id representative BEFORE the banded pair
+    hamming 0 ≤ max_hamming), so each signature-equivalence class
+    contracts into its min-id representative BEFORE the banded pair
     join: an inter-class doc pair exists iff the same pair of signature
     VALUES passes the band+hamming test, i.e. iff the representatives
     are paired — components of the contracted graph expand to exactly
     the components of the full doc graph, and the component minimum is
     preserved (each representative is already its class minimum).
     Output is therefore IDENTICAL to the uncontracted composition
-    (oracle hash pinned).
+    (oracle hash pinned). The contraction removes every intra-class
+    pair (sf1.0: 164M raw doc pairs become 54M signature pairs; the
+    5k-doc benchmark corpus: 15.7k become 9.5k).
 
-    The regime is chosen by a ~free DENSITY PROBE: the banded
-    self-join's candidate volume is Σ n·(n−1)/2 over (band, value)
-    groups, and simhash bands have at most n_bands · 2^(bits/n_bands)
+    The CC edge layout comes from a ~free DENSITY PROBE over the
+    representatives: the banded self-join's candidate volume is
+    Σ n·(n−1)/2 over (band, value) groups, an upper bound on the pairs
+    CC stores, and simhash bands have at most n_bands · 2^(bits/n_bands)
     distinct keys (112 at 32/7) — one map-side-combined aggregate
-    collecting ~a hundred rows at ANY corpus size, upper-bounding the
-    true pair count. Below MORPH_KGC_SIMHASH_CONTRACT_MIN_CANDS
-    (default 50M) the direct sparse composition runs unchanged
-    (contraction overhead would outweigh its savings — measured ~+1 s
-    at sf0.1 where only 8% of signatures repeat); above it the
-    contraction engages and the clustering runs in dense
-    single-direction edge mode (at sf1.0: 164M raw doc pairs contract
-    to 54M signature pairs, the difference between an OOM and ~20 s).
+    collecting ~a hundred rows at ANY corpus size. Above
+    ``_CC_DUAL_EDGE_MAX`` candidates CC runs in dense single-direction
+    edge mode, otherwise in the doubled-edge mode — the decision
+    ``dup_clusters(dense=None)`` would take, without its staging pass.
     """
-    import os
-
     if n_bands is None:
         n_bands = max_hamming + 1
-    contract_min = int(os.environ.get(
-        "MORPH_KGC_SIMHASH_CONTRACT_MIN_CANDS", "50000000"))
     sig = simhash(df, id_col, text_col, bits=bits).persist()
-    # corpus-count shortcut: each band holds at most n·(n−1)/2 same-
-    # value pairs, so n_bands·n·(n−1)/2 upper-bounds the probe's
-    # candidate volume (summed over ALL bands) for ANY signature
-    # distribution — a corpus small enough on the raw count alone is
-    # PROVABLY sparse without the band-probe aggregate, and one
-    # parquet-count job (footer statistics, no data scan) replaces a
-    # signature-materializing explode+groupBy job. Corpora above the
-    # bound still pay the exact probe; the branch decision — hence the
-    # output — is identical either way.
-    n_docs = df.count()
-    if n_bands * n_docs * (n_docs - 1) // 2 <= contract_min:
-        cand_bound = 0
-    else:
-        width = bits // n_bands
-        mask = (1 << width) - 1
-        band_counts = (sig.select(F.expr("explode(array(%s))" % ", ".join(
-            f"struct({b} AS band, shiftright(simhash, {b * width}) & {mask} "
-            f"AS val)" for b in range(n_bands))).alias("bb"))
-            .groupBy("bb.band", "bb.val").count().collect())
-        cand_bound = sum(r["count"] * (r["count"] - 1) // 2
-                         for r in band_counts)
-
-    if cand_bound <= contract_min:
-        pairs = _simhash_pairs_from_sig(sig, id_col, max_hamming, bits,
-                                        n_bands)
-        out = dup_clusters(df.select(id_col), pairs, id_col, dense=False)
-        sig.unpersist()
-        return out
-
     rep = (sig.groupBy("simhash").agg(F.min(id_col).alias("__rep"))
            .persist())
     reps = rep.select(F.col("__rep").alias(id_col), F.col("simhash"))
+    width = bits // n_bands
+    mask = (1 << width) - 1
+    band_counts = (reps.select(F.expr("explode(array(%s))" % ", ".join(
+        f"struct({b} AS band, shiftright(simhash, {b * width}) & {mask} "
+        f"AS val)" for b in range(n_bands))).alias("bb"))
+        .groupBy("bb.band", "bb.val").count().collect())
+    cand_bound = sum(r["count"] * (r["count"] - 1) // 2 for r in band_counts)
     pairs = _simhash_pairs_from_sig(reps, id_col, max_hamming, bits, n_bands)
-    rc = dup_clusters(reps.select(id_col), pairs, id_col, dense=True)
+    rc = dup_clusters(reps.select(id_col), pairs, id_col,
+                      dense=cand_bound > _CC_DUAL_EDGE_MAX)
     rep_clusters = rc.withColumnRenamed(id_col, "__rep")
     try:
         out = (sig.join(rep, "simhash")

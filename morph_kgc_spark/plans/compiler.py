@@ -25,6 +25,7 @@ Scale notes (100 TB target):
 
 from __future__ import annotations
 
+import re
 from typing import Callable, Iterable, Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -133,19 +134,28 @@ def _template_parts(template: str) -> tuple[list[str], list[str]]:
     return parts, refs
 
 
-# RFC-3986 scheme: a term matching this is an absolute IRI and is never
-# resolved against the document base
-_ABSOLUTE_IRI_RE = "^[A-Za-z][A-Za-z0-9+.-]*:"
+# RFC-3986 scheme: a term starting with one and a colon is an absolute
+# IRI and is never resolved against the document base
+_SCHEME_RE = "[A-Za-z][A-Za-z0-9+.-]*"
+_ABSOLUTE_IRI_RE = f"^{_SCHEME_RE}:"
 # characters that cannot appear in an IRI (space/controls and RFC-3987
 # excluded delimiters) — rows producing such IRIs are data errors and are
 # omitted per the R2RML term-generation rules (W3C test cases RMLTC0019b+)
 _INVALID_IRI_CHARS_RE = '[\\x00-\\x20<>"{}|\\\\^`]'
 
 
-def _resolve_base_sql(term: str, base_iri: str) -> str:
-    """Row-level base-IRI resolution (R2RML: relative IRIs resolve
-    against the base; whether a value is relative depends on the row —
-    RMLTC0019a has absolute and relative values in one column)."""
+def _resolve_base_sql(term: str, base_iri: str, lead: str) -> str:
+    """Base-IRI resolution (R2RML: relative IRIs resolve against the
+    base), folded at compile time from ``lead``, the term's leading
+    constant text: a lead that already carries a scheme makes every row
+    absolute; a non-empty lead that no suffix can turn into a scheme
+    (it is not all scheme characters) makes every row relative. Any
+    other term is decided per row — RMLTC0019a has absolute and
+    relative values in one column."""
+    if re.match(_ABSOLUTE_IRI_RE, lead):
+        return term
+    if lead and not re.fullmatch(_SCHEME_RE, lead):
+        return f"concat({sql_str(base_iri)}, {term})"
     return (f"(CASE WHEN {term} RLIKE {sql_str(_ABSOLUTE_IRI_RE)} "
             f"THEN {term} ELSE concat({sql_str(base_iri)}, {term}) END)")
 
@@ -209,7 +219,7 @@ def _term_sql(tm: M.TermMap, *, datatype: Optional[str] = None,
         pieces.append(sql_str(parts[-1]))
     term = pieces[0] if len(pieces) == 1 else f"concat({', '.join(pieces)})"
     if tm.termtype == M.IRI and base_iri:
-        term = _resolve_base_sql(term, base_iri)
+        term = _resolve_base_sql(term, base_iri, parts[0])
     return _wrap_sql(term, tm.termtype) if wrap else term
 
 

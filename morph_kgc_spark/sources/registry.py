@@ -49,7 +49,7 @@ class SourceRegistry:
     def __init__(self, persist_sources: bool = False) -> None:
         self._named: dict[str, DataFrame] = {}
         self._cache: dict[str, DataFrame] = {}
-        self._persist = persist_sources
+        self.persist_sources = persist_sources
 
     def register(self, name: str, df: DataFrame) -> None:
         """Register an in-memory / pre-built DataFrame source."""
@@ -120,7 +120,7 @@ class SourceRegistry:
         key = source.cache_key()
         if key not in self._cache:
             df = self._load(spark, source)
-            if self._persist:
+            if self.persist_sources:
                 from pyspark.storagelevel import StorageLevel
 
                 df = df.persist(StorageLevel.MEMORY_AND_DISK)

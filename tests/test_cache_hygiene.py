@@ -102,6 +102,25 @@ def test_pipeline_triples_releases_linked_persist(spark):
         "release(run_pipeline output) must leave the session cache-clean"
 
 
+def test_materialize_releases_persisted_sources(spark):
+    """With a persist_sources registry the materialized frame owns the
+    persisted sources: releasing it leaves the session cache-clean."""
+    import os
+
+    from morph_kgc_spark.engine import materialize
+    from morph_kgc_spark.sources.registry import default_registry
+
+    fixtures = os.path.join(os.path.dirname(__file__), "fixtures")
+    before = persistent_rdd_ids(spark)
+    out = materialize(spark, os.path.join(fixtures, "mapping_basic.ttl"),
+                      registry=default_registry(persist_sources=True))
+    assert out.count() == 13
+    assert persistent_rdd_ids(spark) - before, \
+        "sanity: the persisted sources should be live while consuming"
+    release(out)
+    assert persistent_rdd_ids(spark) == before
+
+
 def test_dup_clusters_releases_round_blocks(spark):
     before = persistent_rdd_ids(spark)
     ids = spark.range(0, 40).select(F.col("id").alias("doc_id"))

@@ -227,3 +227,34 @@ def test_safe_percent_encoding_mode(spark):
     ).collect()
     assert r.strict == "a%2Fb%20c"
     assert r.safe_slash == "a/b%20c"
+
+
+@pytest.mark.parametrize("subject, expected, row_level", [
+    # the leading constant carries a scheme: every row is absolute
+    (M.TermMap(M.TEMPLATE, EX + "{v}", M.IRI),
+     {f"<{EX}a%20b>", f"<{EX}c%3A>"}, False),
+    # a leading constant that no suffix can make a scheme: every row
+    # is relative
+    (M.TermMap(M.TEMPLATE, "item/{v}", M.IRI),
+     {f"<{EX}base/item/a%20b>", f"<{EX}base/item/c%3A>"}, False),
+    # all scheme characters, so the row value decides
+    (M.TermMap(M.TEMPLATE, "urn{v}", M.IRI),
+     {f"<{EX}base/urna%20b>", f"<{EX}base/urnc%3A>"}, True),
+    # a reference-valued IRI (RMLTC0019a): absolute and relative rows
+    (M.TermMap(M.REFERENCE, "r", M.IRI),
+     {"<http://x.org/abs>", f"<{EX}base/rel>"}, True),
+])
+def test_base_iri_resolution_folds_at_compile_time(spark, subject, expected,
+                                                   row_level):
+    from morph_kgc_spark.plans.compiler import _term_sql
+
+    reg = _registry_with(spark, "t", pd.DataFrame(
+        {"v": ["a b", "c:"], "r": ["http://x.org/abs", "rel"]}))
+    rule = M.Rule(source=M.Source("df", "t"), subject=subject,
+                  predicate=M.TermMap(M.CONSTANT, EX + "p", M.IRI),
+                  object=M.TermMap(M.CONSTANT, EX + "o", M.IRI),
+                  base_iri=EX + "base/")
+    assert {r.subject for r in compile_rule(spark, rule, reg).collect()} \
+        == expected
+    assert ("RLIKE" in _term_sql(subject, base_iri=rule.base_iri)) \
+        == row_level

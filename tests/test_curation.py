@@ -61,6 +61,27 @@ class TestDecontaminate:
         assert sorted(map(tuple, a.collect())) == \
             sorted(map(tuple, b.collect()))
 
+    def test_default_regime_choice_both_sides(self, spark, monkeypatch):
+        """The default picks the array regime for a small benchmark and
+        the hash join above _DECONTAM_MAX_ARRAY_DOCS; same rows."""
+        from morph_kgc_spark.operators import curation
+
+        docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        corpus = docs.where(F.col("doc_id") % 20 != 7)
+        bench = docs.where(F.col("doc_id") % 20 == 7)
+
+        def run():
+            out = decontaminate(corpus, bench, "doc_id", "text", n=3,
+                                min_hit=5)
+            plan = out._jdf.queryExecution().optimizedPlan().toString()
+            return "array_intersect" in plan, sorted(map(tuple, out.collect()))
+
+        array_side, rows = run()
+        monkeypatch.setattr(curation, "_DECONTAM_MAX_ARRAY_DOCS", 0)
+        join_side, join_rows = run()
+        assert (array_side, join_side) == (True, False)
+        assert join_rows == rows and any(r[3] for r in rows)
+
     def test_corpus_side_has_no_shuffle_broadcast_array(self, spark):
         """The 100-TB corpus side must not shuffle: the only exchanges
         allowed in the broadcast-array plan are on the (tiny) benchmark

@@ -270,7 +270,7 @@ def test_kmeans_empty_cell_keeps_previous_centroid(spark):
 
 
 # ---------------------------------------------------------------------------
-# round-7 sf1.0 hardening: signature contraction + dense CC edge mode
+# signature contraction + the CC edge layout and join-strategy branches
 # ---------------------------------------------------------------------------
 
 
@@ -278,46 +278,65 @@ def _cluster_rows(df):
     return sorted((r["doc_id"], r["cluster_id"]) for r in df.collect())
 
 
-def test_simhash_contraction_parity(spark, monkeypatch):
-    """The density-adaptive contraction (equal-signature docs collapse
-    into min-id representatives before the banded join, CC in dense
-    single-direction edge mode) must produce EXACTLY the direct sparse
-    composition's clusters. Forced via the env threshold because the
-    contraction only engages above 50M banded candidates by default."""
+def test_simhash_contraction_parity(spark):
+    """Contracting equal-signature docs into min-id representatives
+    before the banded join must produce EXACTLY the uncontracted
+    simhash_pairs -> dup_clusters composition's clusters."""
     from morph_kgc_spark.operators import dedup as D
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    direct = _cluster_rows(
-        D.simhash_dup_clusters(docs, "doc_id", "text", max_hamming=6))
-    monkeypatch.setenv("MORPH_KGC_SIMHASH_CONTRACT_MIN_CANDS", "0")
+    direct = _cluster_rows(D.dup_clusters(
+        docs.select("doc_id"),
+        D.simhash_pairs(docs, "doc_id", "text", max_hamming=6, lazy=True),
+        "doc_id"))
     contracted = _cluster_rows(
         D.simhash_dup_clusters(docs, "doc_id", "text", max_hamming=6))
     assert contracted == direct
 
 
-def test_simhash_count_shortcut_bounds_all_bands(spark, monkeypatch):
-    """The corpus-count shortcut may skip the band probe only when
-    n_bands·n(n−1)/2 — the probe's worst case over ALL bands — fits the
-    contraction threshold. 40 copies of one text: 780 raw pairs fit
-    1000, but 7 bands × 780 = 5460 candidates do not, so the contracted
-    (dense) path must run — and it finds the single cluster."""
-    from morph_kgc_spark.operators import dedup as D
-
-    monkeypatch.setenv("MORPH_KGC_SIMHASH_CONTRACT_MIN_CANDS", "1000")
+def _spy_dup_clusters(D, monkeypatch):
+    """Record what simhash_dup_clusters hands dup_clusters: the
+    representative count, the pair count and the edge layout."""
     seen = []
     real = D.dup_clusters
 
-    def spy(*args, **kw):
-        seen.append(kw.get("dense"))
-        return real(*args, **kw)
+    def spy(ids, pairs, id_col, **kw):
+        seen.append((ids.count(), pairs.count(), kw.get("dense")))
+        return real(ids, pairs, id_col, **kw)
 
     monkeypatch.setattr(D, "dup_clusters", spy)
+    return seen
+
+
+def test_simhash_all_duplicate_corpus(spark, monkeypatch):
+    """40 copies of one text contract into ONE representative with zero
+    pairs, and expand back into one 40-member cluster."""
+    from morph_kgc_spark.operators import dedup as D
+
+    seen = _spy_dup_clusters(D, monkeypatch)
     docs = spark.createDataFrame(
         [(i, "the same small text") for i in range(40)], "doc_id long, text string")
     rows = _cluster_rows(
         D.simhash_dup_clusters(docs, "doc_id", "text", max_hamming=6))
-    assert seen == [True]
+    assert seen == [(1, 0, False)]
     assert {c for _, c in rows} == {0} and len(rows) == 40
+
+
+def test_simhash_edge_layout_follows_band_probe(spark, monkeypatch):
+    """The representatives' band-probe bound picks the CC edge layout:
+    doubled edges below _CC_DUAL_EDGE_MAX, single-direction above —
+    with the same clusters either way."""
+    from morph_kgc_spark.operators import dedup as D
+
+    seen = _spy_dup_clusters(D, monkeypatch)
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    sparse = _cluster_rows(
+        D.simhash_dup_clusters(docs, "doc_id", "text", max_hamming=6))
+    monkeypatch.setattr(D, "_CC_DUAL_EDGE_MAX", 0)
+    dense = _cluster_rows(
+        D.simhash_dup_clusters(docs, "doc_id", "text", max_hamming=6))
+    assert [d for _, _, d in seen] == [False, True]
+    assert seen[0][1] > 0 and dense == sparse
 
 
 def test_dup_clusters_dense_mode_parity(spark, monkeypatch):
@@ -340,6 +359,32 @@ def test_dup_clusters_dense_mode_parity(spark, monkeypatch):
     assert dense == sparse
     # dense=None decides from a staging checkpoint count; forcing the
     # threshold to 0 routes even this tiny graph through dense mode
-    monkeypatch.setenv("MORPH_KGC_CC_DUAL_EDGE_MAX", "0")
+    monkeypatch.setattr(D, "_CC_DUAL_EDGE_MAX", 0)
     decided = _cluster_rows(D.dup_clusters(ids, pairs(), "doc_id"))
     assert decided == sparse
+
+
+def test_dup_clusters_shuffle_rounds_match_broadcast(spark, monkeypatch):
+    """Above _CC_BROADCAST_MAX_NODES the rounds shuffle-join instead of
+    broadcasting the label table; the 40-node path clusters the same."""
+    from morph_kgc_spark.operators import dedup as D
+
+    n = 40
+    ids = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
+                                  ["id_a", "id_b"])
+    broadcasts = []
+    real = D.F.broadcast
+
+    def spy(df):
+        broadcasts.append(df)
+        return real(df)
+
+    monkeypatch.setattr(D.F, "broadcast", spy)
+    default = _cluster_rows(D.dup_clusters(ids, pairs, "doc_id"))
+    assert broadcasts
+    broadcasts.clear()
+    monkeypatch.setattr(D, "_CC_BROADCAST_MAX_NODES", 0)
+    shuffled = _cluster_rows(D.dup_clusters(ids, pairs, "doc_id"))
+    assert not broadcasts
+    assert shuffled == default == [(i, 0) for i in range(n)]
