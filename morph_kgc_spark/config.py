@@ -50,6 +50,22 @@ class EngineConfig:
         return [p for paths in self.section_mappings.values() for p in paths]
 
 
+def apply_runtime_defaults(spark: SparkSession) -> None:
+    """Keep codegen stage ids out of generated class names unless the
+    session already has a value for ``useIdInClassName``.
+
+    AQE numbers whole-stage-codegen stages in the order it re-plans
+    query stages, and the id is part of each class name, so
+    byte-identical code gets a new name on every run and misses Spark's
+    codegen cache (≈50 Janino compiles per repeat run of the benchmark
+    mapping, 0 without the id). A runtime SQLConf that only names
+    generated classes: plans and output are unchanged.
+    """
+    key = "spark.sql.codegen.useIdInClassName"
+    if spark.conf.get(key, None) is None:
+        spark.conf.set(key, "false")
+
+
 def load_config(config: str) -> EngineConfig:
     """Parse an INI string or file path into an EngineConfig."""
     parser = configparser.ConfigParser()

@@ -17,6 +17,7 @@ from typing import Iterable, Optional, Union
 from pyspark.sql import DataFrame, SparkSession
 
 from morph_kgc_spark import model as M
+from morph_kgc_spark.config import apply_runtime_defaults
 from morph_kgc_spark.functions.encoding import safe_encoding_context
 from morph_kgc_spark.operators.cache import own
 from morph_kgc_spark.plans.compiler import DEFAULT_NA_VALUES, materialize_rules
@@ -46,7 +47,14 @@ def materialize(spark: SparkSession,
     With a ``persist_sources`` registry the returned frame owns the
     persisted sources its rules read: ``operators.cache.release`` on it
     frees them.
+
+    Sets ``spark.sql.codegen.useIdInClassName=false`` on the session
+    unless the user already set it (``config.apply_runtime_defaults``):
+    with stage ids in generated class names, AQE's re-planning renames
+    byte-identical code on every run, so repeat materializations miss
+    Spark's codegen cache and recompile their stages.
     """
+    apply_runtime_defaults(spark)
     registry = registry or default_registry()
 
     if isinstance(mapping, str):

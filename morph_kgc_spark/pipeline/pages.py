@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from morph_kgc_spark import model as M
+from morph_kgc_spark.config import apply_runtime_defaults
 from morph_kgc_spark.operators.text import tokens, word_ngrams
 from morph_kgc_spark.plans.compiler import materialize_rules
 from morph_kgc_spark.sources.registry import SourceRegistry
@@ -244,12 +245,18 @@ def pipeline_triples(spark: SparkSession, pages: DataFrame,
     page –crawledAt→ xsd:dateTime, entity –label→ alias literal.
     Subjects/objects are canonicalized with the engine's template +
     percent-encode machinery (byte-identical to reference rules).
+
+    Like ``engine.materialize``, sets
+    ``spark.sql.codegen.useIdInClassName=false`` unless the user set it,
+    so repeat runs reuse Spark's cached generated classes instead of
+    recompiling them under new stage-id names.
     """
     # JVM decode must REPLACE malformed bytes (python errors="replace"
     # parity); Spark 4's default decode errors out instead. Runtime SQL
     # conf, scoped to this session, only affects encode/decode coding
     # errors.
     spark.conf.set("spark.sql.legacy.codingErrorAction", "true")
+    apply_runtime_defaults(spark)
     extracted = pages.withColumn("etext", extract_text_udf(F.col("html")))
     linked = link_entities(detect_mentions(
         extracted.select("url", F.col("etext").alias("text"), "lang"), aliases))

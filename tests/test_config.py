@@ -4,7 +4,7 @@ import os
 
 import pytest
 
-from morph_kgc_spark import materialize_from_config
+from morph_kgc_spark import materialize, materialize_from_config
 
 EX = "http://example.com/"
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
@@ -49,3 +49,36 @@ def test_package_reads_no_environment():
                         if re.search(r"MORPH_KGC_|os\.environ|getenv", line):
                             hits.append(f"{os.path.relpath(path, pkg)}:{no}")
     assert hits == []
+
+
+STABLE_NAMES = "spark.sql.codegen.useIdInClassName"
+
+
+def _materialize_basic(spark):
+    return materialize(spark, os.path.join(FIXTURES, "mapping_basic.ttl"))
+
+
+def test_materialize_keeps_stage_ids_out_of_class_names(spark):
+    spark.conf.unset(STABLE_NAMES)
+    _materialize_basic(spark)
+    assert spark.conf.get(STABLE_NAMES) == "false"
+
+
+def test_materialize_respects_user_class_name_setting(spark):
+    spark.conf.set(STABLE_NAMES, "true")
+    try:
+        _materialize_basic(spark)
+        assert spark.conf.get(STABLE_NAMES) == "true"
+    finally:
+        spark.conf.unset(STABLE_NAMES)
+
+
+def test_repeat_materialize_compiles_no_classes(spark):
+    """Stable class names let the second run of the same mapping reuse
+    every generated class from Spark's codegen cache."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    first = _materialize_basic(spark).collect()
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    second = _materialize_basic(spark).collect()
+    assert metrics.METRIC_COMPILATION_TIME().getCount() - before == 0
+    assert sorted(first) == sorted(second)
