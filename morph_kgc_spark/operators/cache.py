@@ -12,11 +12,14 @@ callers that are done with it release those too with :func:`release`.
 count): it also truncates the logical plan, which iterative algorithms
 need anyway (the plan string otherwise grows per round until plan
 processing OOMs), and its blocks are addressable for explicit release.
+
+Ownership rides on the returned frame, as Spark's own persistence does:
+the program holds the handle. Release the frame the operator returned.
+A derivative (``out.where(...)``) is a fresh wrapper that owns nothing,
+so releasing it frees none of ``out``'s intermediates.
 """
 
 from __future__ import annotations
-
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -27,281 +30,51 @@ def persistent_rdd_ids(spark: SparkSession) -> set[int]:
     return {int(k) for k in jmap.keySet().toArray()}
 
 
-# owned persisted intermediates by their analyzed plan's semanticHash —
-# the ownership record that SURVIVES transformations: df.where(...)
-# returns a fresh Python wrapper (dropping any attribute), but its
-# analyzed tree still CONTAINS the persisted intermediate's subtree, and
-# semanticHash is exprId-normalized so the subtree is findable from any
-# derivative. Each list entry is ONE ownership instance (one own() call
-# recorded one dep); releasing a derivative frees one instance per
-# matching hash — refcount semantics, so a concurrent identical operator
-# run keeps its own instance alive (round-6 advice, cache.py:441).
-#
-# Entries are WEAK references: an ownership instance lives exactly as
-# long as its dep wrapper is strongly reachable (normally via the owning
-# result's _mkgc_owned attribute), so a lazy result the caller drops
-# without release() stops pinning driver memory the moment Python frees
-# it — the registry self-bounds over a long session (round-6 directive
-# #5). A liveness probe (`storageLevel`) cannot do this job: the cache
-# manager is PLAN-keyed, so a stale wrapper is indistinguishable from a
-# live identical persist. _sweep() prunes dead refs and also refs whose
-# cache entry is entirely gone (e.g. spark.catalog.clearCache() while
-# the wrappers are still referenced).
-_OWNED_BY_HASH: dict[int, list] = {}  # hash -> list[weakref.ref[DataFrame]]
-
-# persisted-RDD ids at the last own()/release() look: the cheap change
-# detector that gates the per-entry liveness probe (ids disappearing =
-# blocks were dropped somewhere = stale registry entries possible)
-_LAST_RDD_IDS: set[int] = set()
-
-
-def _cache_entry_live(dep: DataFrame) -> bool:
-    """True while the cache manager still holds an entry for ``dep``'s
-    PLAN (persisted lazily counts; dropped via unpersist/clearCache does
-    not). Plan-keyed: any semantically identical live persist counts.
-    Errors (dead session) count as gone."""
-    try:
-        lvl = dep.storageLevel
-        return bool(lvl.useMemory or lvl.useDisk)
-    except Exception:
-        return False
-
-
-def _sweep() -> None:
-    """Prune ownership instances whose wrapper was garbage-collected or
-    whose plan no longer has any cache entry at all."""
-    for h in list(_OWNED_BY_HASH):
-        bucket = [r for r in _OWNED_BY_HASH[h]
-                  if r() is not None and _cache_entry_live(r())]
-        if bucket:
-            _OWNED_BY_HASH[h] = bucket
-        else:
-            _OWNED_BY_HASH.pop(h, None)
-
-
-def _sweep_dead() -> None:
-    """Prune only GC'd wrappers — no JVM calls. The liveness probe in
-    :func:`_sweep` is a CacheManager plan-comparison per entry, which on
-    the own() hot path made operator construction
-    O(live_entries x cached_entries) per call (round-6 review); dead-ref
-    pruning alone keeps own() O(registry) driver-side."""
-    for h in list(_OWNED_BY_HASH):
-        bucket = [r for r in _OWNED_BY_HASH[h] if r() is not None]
-        if bucket:
-            _OWNED_BY_HASH[h] = bucket
-        else:
-            _OWNED_BY_HASH.pop(h, None)
-
-
-def _release_instance(dep: DataFrame, h: int | None = None,
-                      exact_only: bool = False) -> None:
-    """Drop ONE ownership instance of ``dep``; unpersist only when it
-    was the LAST registered instance for its plan hash.
-
-    Spark's cache manager is PLAN-keyed: two semantically identical
-    persisted frames share one cache entry, so ``dep.unpersist()`` from
-    either wrapper drops the blocks for both. Refcounting therefore has
-    to gate the actual unpersist on the bucket emptying — releasing one
-    of two concurrent identical runs must NOT force the other to
-    recompute (round-6 advice, cache.py:441).
-
-    ``exact_only`` (the attribute-pass contract): the caller holds the
-    ORIGINAL dep wrapper, so its registration — if any — matches by
-    identity. When it does not match but other instances exist, those
-    instances belong to someone else (a concurrent identical run, or a
-    registration that failed in own()): decrementing one anyway would
-    let a later double release silently steal blocks a live run still
-    needs (round-7 ADVICE fix, cache.py:120). Only the hash-keyed
-    DERIVATIVE pass — which by construction passes a wrapper taken
-    from the bucket — may drop an arbitrary instance.
-    """
-    if h is None:
-        try:
-            h = int(dep._jdf.queryExecution().analyzed().semanticHash())
-        except Exception:
-            try:
-                dep.unpersist()
-            except Exception:
-                pass
-            return
-    bucket = [r for r in _OWNED_BY_HASH.get(h, []) if r() is not None]
-    if any(r() is dep for r in bucket):
-        bucket = [r for r in bucket if r() is not dep]
-    elif bucket:
-        if exact_only:
-            # not registered here while other live instances exist:
-            # nothing of OURS to release, and the blocks are theirs
-            _OWNED_BY_HASH[h] = bucket
-            return
-        bucket = bucket[:-1]  # derivative path: drop any one instance
-    if bucket:
-        _OWNED_BY_HASH[h] = bucket
-        return  # another live ownership still needs the shared blocks
-    _OWNED_BY_HASH.pop(h, None)
-    try:
-        dep.unpersist()
-    except Exception:
-        pass
-
-
-def _plan_semantic_hashes(df: DataFrame) -> set[int]:
-    """semanticHash of every node in the frame's analyzed logical plan."""
-    hashes: set[int] = set()
-    stack = [df._jdf.queryExecution().analyzed()]
-    while stack:
-        node = stack.pop()
-        hashes.add(int(node.semanticHash()))
-        children = node.children()
-        for i in range(children.size()):
-            stack.append(children.apply(i))
-    return hashes
-
-
 def own(result: DataFrame, intermediates: list[DataFrame]) -> DataFrame:
     """Attach persisted intermediates to ``result`` for deferred release.
 
-    Lazy-mode pair operators (``minhash_lsh_pairs(..., lazy=True)`` etc.)
+    Lazy-mode pair operators (``simhash_pairs(..., lazy=True)`` etc.)
     skip the eager ``localCheckpoint`` of their result — the caller
     consumes it exactly once, so paying a checkpoint write inside the
     query is pure overhead — but their persisted intermediates must stay
-    alive until that consumption happens (the two sides of an aliased
-    self-join get no ReusedExchange; the persist is load-bearing).
-    ``own`` records those intermediates on the returned wrapper so that
-    :func:`release` frees them afterwards. Ownership composes: owning an
-    already-owning frame chains its dependencies.
+    alive until that consumption happens. ``own`` lists them on the
+    returned wrapper so that :func:`release` frees them afterwards.
+    Ownership composes: owning an already-owning frame also takes over
+    the intermediates it owns.
 
-    Ownership is ALSO recorded in a plan-keyed registry
-    (``_OWNED_BY_HASH``), so it survives transformations: releasing a
-    DERIVATIVE (``release(result.where(...))``) finds the intermediate's
-    subtree in the derivative's analyzed plan by semanticHash and frees
-    it (round-4 advice: the wrapper attribute alone was lost on any
-    select/where). Two logically IDENTICAL plans share a semanticHash
-    and therefore a registry bucket; each ownership is one bucket entry
-    and a derivative release frees ONE entry per matching hash, so a
-    concurrent identical run's instance stays registered. (Identical
-    plans also share cache-manager blocks, so which instance's wrapper
-    gets unpersisted is immaterial — block refcounting is what the
-    bucket models. Release each owned result at most once.)
-
-    CAVEAT (registry self-bounding vs block lifetime): the registry
-    holds WEAK references, so an owning result dropped without
-    :func:`release` stops pinning driver memory — but its persisted
-    blocks stay in the cache manager with no remaining unpersist
-    handle until ``spark.catalog.clearCache()``. Callers that cannot
-    guarantee a release() call should prefer the eager (non-lazy)
-    operator mode, whose intermediates are unpersisted before the
-    operator returns.
+    An owning result dropped without :func:`release` leaves its blocks
+    in the cache manager until ``spark.catalog.clearCache()``; callers
+    that cannot guarantee a release should use the eager operator mode.
     """
     owned = list(getattr(result, "_mkgc_owned", ()))
     for dep in intermediates:
         owned.extend(getattr(dep, "_mkgc_owned", ()))
         owned.append(dep)
-    # dedupe by wrapper identity: chaining the same dep twice (repeated
-    # own() of one wrapper) must not make release() decrement its
-    # registry instance twice (round-7 ADVICE fix, cache.py:120) — the
-    # registry records one instance per WRAPPER (identity-deduped
-    # below), so the attribute list must match that granularity
-    seen: set[int] = set()
-    owned = [d for d in owned if not (id(d) in seen or seen.add(id(d)))]
     result._mkgc_owned = owned
-    _sweep_dead()
-    # Full liveness-probe sweep only when some persisted-RDD id has
-    # DISAPPEARED since the last look (unpersist/clearCache dropped
-    # blocks — every registry entry is then suspect). During normal
-    # operation ids only accumulate between release() calls, so own()
-    # pays ONE getPersistentRDDs call instead of a CacheManager
-    # plan-comparison per live entry (round-6 review finding: the
-    # unconditional probe made own() O(live_entries x cached_entries)).
-    try:
-        ids = persistent_rdd_ids(result.sparkSession)
-        global _LAST_RDD_IDS
-        if _OWNED_BY_HASH and not (_LAST_RDD_IDS <= ids):
-            _sweep()
-        _LAST_RDD_IDS = ids
-    except Exception:
-        pass
-    for dep in owned:
-        try:
-            h = int(dep._jdf.queryExecution().analyzed().semanticHash())
-            bucket = _OWNED_BY_HASH.setdefault(h, [])
-            if not any(r() is dep for r in bucket):
-                bucket.append(weakref.ref(dep))
-        except Exception:
-            pass
     return result
 
 
 def release(df: DataFrame) -> None:
-    """Release the blocks of a ``localCheckpoint``-ed DataFrame.
+    """Free the blocks of a frame an operator returned.
 
-    Also unpersists any intermediates attached via :func:`own` (lazy-mode
-    operators). The DataFrame must not be used afterwards. No-op when the
-    frame is not checkpoint-backed or its blocks are already gone.
-    (PySpark has no public unpersist for checkpointed frames; the JVM
-    handles here are stable internals — same class of access as the
-    session's own ``_jsc`` — and the hygiene test pins the behavior.)
+    Unpersists every intermediate attached via :func:`own`, then drops
+    the frame's own ``localCheckpoint`` blocks. The frame must not be
+    used afterwards. A second release, or a release of a frame that
+    owns nothing and is not checkpoint-backed, is a no-op. (PySpark has
+    no public unpersist for checkpointed frames; the JVM handles here
+    are stable internals — same class of access as the session's own
+    ``_jsc`` — and the hygiene test pins the behavior.)
 
-    CONTAINMENT SEMANTICS (the contract, stated because the two cases
-    are structurally indistinguishable): releasing a frame releases one
-    ownership instance of EVERY owned subtree found in its analyzed
-    plan — including subtrees chained into an ancestor before a
-    transformation dropped the attribute (``release(own(a.where(...),
-    [dep2]))`` frees a's persists too, the round-6 leak fix). The flip
-    side: if you derive ``c`` from a still-live owning frame ``a`` and
-    release ``c``, a's instance is taken and a recomputes on next use.
-    Keep ``a`` alive by releasing only frames that do not contain it,
-    or by re-owning: ``own(c, [a])`` chains a's deps so each release
-    accounting stays explicit. Concurrent IDENTICAL runs remain safe
-    either way — each own() registered its own instance and the real
-    unpersist waits for the last one.
+    Spark's cache manager is PLAN-keyed: unpersisting an intermediate
+    also drops the blocks of a semantically identical persist made by
+    a concurrent run, which then recomputes them on its next use.
     """
-    has_attr = hasattr(df, "_mkgc_owned")
-    released_hashes: set[int] = set()
-    for dep in getattr(df, "_mkgc_owned", ()):
-        h = None
-        try:
-            h = int(dep._jdf.queryExecution().analyzed().semanticHash())
-            released_hashes.add(h)
-        except Exception:
-            pass
-        _release_instance(dep, h, exact_only=True)
-    if has_attr:
-        df._mkgc_owned = []
-    if not has_attr or released_hashes:
-        # Registry pass: drop ONE ownership instance per owned subtree
-        # found in THIS frame's plan that the attribute pass did not
-        # already cover. Runs for derivatives (fresh wrapper, attribute
-        # lost) AND for re-owned derivatives — own(a.where(...), [dep2])
-        # loses a's chained dep list to the where(), so a's persisted
-        # intermediates are reachable only via the registry (round-6
-        # review finding). A frame whose attribute list was empty (e.g.
-        # already released once) skips this pass so a double release
-        # cannot steal a concurrent identical run's instance.
-        try:
-            in_plan = _plan_semantic_hashes(df)
-            for h in list(_OWNED_BY_HASH):
-                if h in in_plan and h not in released_hashes:
-                    live = [r() for r in _OWNED_BY_HASH[h]
-                            if r() is not None]
-                    if live:
-                        _release_instance(live[-1])
-        except Exception:
-            pass
-    _sweep()
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getName().endswith(".LogicalRDD"):
-            rdd_id = plan.rdd().id()
-            jmap = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
-            for k in jmap.keySet().toArray():
-                if int(k) == rdd_id:
-                    jmap.get(k).unpersist(False)
-    except Exception:
-        pass
-    try:
-        # re-baseline the change detector: this release's unpersists are
-        # accounted for, so the next own() skips the probe sweep
-        global _LAST_RDD_IDS
-        _LAST_RDD_IDS = persistent_rdd_ids(df.sparkSession)
-    except Exception:
-        pass
+    owned = getattr(df, "_mkgc_owned", [])
+    for dep in owned:
+        dep.unpersist()
+    owned.clear()
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getName().endswith(".LogicalRDD"):
+        rdd = plan.rdd()
+        if rdd.getStorageLevel().isValid():  # NONE once released
+            rdd.unpersist(False)

@@ -205,12 +205,12 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     simhash's coarse bands), and the cross-band pair dedup. The
     signature stream is consumed exactly once (no self-join), so
     nothing is PERSISTED in either mode — but the default mode still
-    eagerly ``localCheckpoint``-s the (small) pair result so multi-read
-    consumers (e.g. ``dup_clusters``' both-direction edge union) do not
-    recompute the whole tokenize→minhash→pair pipeline per read, the
-    same contract as the sibling pair operators; ``lazy=True`` skips
-    that for single-read callers. ``bucket_cap`` star-pairs degenerate
-    buckets (see :func:`_grouped_pairs`).
+    eagerly ``localCheckpoint``-s the (small) pair result so a caller
+    that reads it more than once (e.g. counts the pairs, then clusters
+    them) does not recompute the whole tokenize→minhash→pair pipeline
+    per read, the same contract as the sibling pair operators;
+    ``lazy=True`` skips that for single-read callers. ``bucket_cap``
+    star-pairs degenerate buckets (see :func:`_grouped_pairs`).
     """
     sigs = minhash_signatures(df, id_col, text_col, n)
     buckets = _band_bucket_expr()
@@ -432,10 +432,9 @@ def ngram_jaccard_topk(df: DataFrame, id_col: str, text_col: str,
     topk = _ngram_topk(sh, sizes, dfreq, id_col, k, df_cap)
     if dfreq is None:
         # nothing cached, but the eager multi-read contract stays
-        # uniform: default mode returns a checkpointed frame so
-        # multi-read consumers (dup_clusters' two-direction edge
-        # union) never recompute the tokenize→join→top-k pipeline
-        # per action (round-4 advice)
+        # uniform: default mode returns a checkpointed frame so a
+        # caller that reads it more than once never recomputes the
+        # tokenize→join→top-k pipeline per action
         return topk if lazy else topk.localCheckpoint()
     if lazy:
         return cache.own(topk, [dfreq])
@@ -827,10 +826,15 @@ def simhash_dup_clusters(df: DataFrame, id_col: str, text_col: str,
     rc = dup_clusters(reps.select(id_col), pairs, id_col,
                       dense=cand_bound > _CC_DUAL_EDGE_MAX)
     rep_clusters = rc.withColumnRenamed(id_col, "__rep")
+    # a NULL text has no tokens, hence no signature: it is its own
+    # singleton cluster (a non-NULL string always splits into ≥ 1 token)
+    null_text = df.where(F.col(text_col).isNull()).select(
+        F.col(id_col), F.col(id_col).alias("cluster_id"))
     try:
         out = (sig.join(rep, "simhash")
                .join(rep_clusters, "__rep")
                .select(F.col(id_col), F.col("cluster_id"))
+               .unionByName(null_text)
                .localCheckpoint())
     finally:
         # release the checkpoint-backed handle, not the renamed

@@ -322,6 +322,31 @@ def test_simhash_all_duplicate_corpus(spark, monkeypatch):
     assert {c for _, c in rows} == {0} and len(rows) == 40
 
 
+def test_simhash_null_text_is_its_own_cluster(spark):
+    """A NULL text has no tokens and so no signature; it must still come
+    out as its own singleton, as in the DuckDB oracle (and the composed
+    simhash_pairs -> dup_clusters path)."""
+    import duckdb
+
+    from morph_kgc_spark import oracles
+    from morph_kgc_spark.operators import dedup as D
+
+    rows = [(1, "a b c d e"), (2, "a b c d e"), (3, None), (4, ""),
+            (5, "x y z")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = _cluster_rows(
+        D.simhash_dup_clusters(docs, "doc_id", "text", max_hamming=6))
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+        con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+        want = sorted(con.execute(oracles.dedup_clusters()).fetchall())
+    finally:
+        con.close()
+    assert (3, 3) in want
+    assert got == want
+
+
 def test_simhash_edge_layout_follows_band_probe(spark, monkeypatch):
     """The representatives' band-probe bound picks the CC edge layout:
     doubled edges below _CC_DUAL_EDGE_MAX, single-direction above —
