@@ -77,3 +77,23 @@ def natural_mapping_sql(expr: str, datatype: str | None) -> str:
     if datatype == M.XSD_INTEGER:
         return f"CAST(CAST(CAST({expr} AS DOUBLE) AS BIGINT) AS STRING)"
     return expr
+
+
+def natural_mapping_lossless(datatype: str | None, source_type) -> bool:
+    """Whether :func:`natural_mapping_sql` is the identity on the string
+    forms of a ``source_type`` column (its Spark type before the cast to
+    string), so distinct values keep distinct lexical forms. The three
+    rewriting mappings are lossless only on their own type: a string
+    column may hold ``'1'`` and ``'1.0'``, or ``' '`` and ``'T'``
+    spellings of one dateTime; a bigint beyond 2^53 rounds through the
+    double."""
+    from pyspark.sql import types as T
+
+    from morph_kgc_spark import model as M
+
+    own_types = {
+        M.XSD_BOOLEAN: (T.BooleanType,),
+        M.XSD_DATETIME: (T.TimestampType, T.TimestampNTZType, T.DateType),
+        M.XSD_INTEGER: (T.ByteType, T.ShortType, T.IntegerType),
+    }.get(datatype)
+    return own_types is None or isinstance(source_type, own_types)

@@ -31,7 +31,8 @@ def persistent_rdd_ids(spark: SparkSession) -> set[int]:
 
 
 def own(result: DataFrame, intermediates: list[DataFrame]) -> DataFrame:
-    """Attach persisted intermediates to ``result`` for deferred release.
+    """Attach persisted or checkpointed intermediates to ``result`` for
+    deferred release.
 
     Lazy-mode pair operators (``simhash_pairs(..., lazy=True)`` etc.)
     skip the eager ``localCheckpoint`` of their result — the caller
@@ -57,13 +58,13 @@ def own(result: DataFrame, intermediates: list[DataFrame]) -> DataFrame:
 def release(df: DataFrame) -> None:
     """Free the blocks of a frame an operator returned.
 
-    Unpersists every intermediate attached via :func:`own`, then drops
-    the frame's own ``localCheckpoint`` blocks. The frame must not be
-    used afterwards. A second release, or a release of a frame that
-    owns nothing and is not checkpoint-backed, is a no-op. (PySpark has
-    no public unpersist for checkpointed frames; the JVM handles here
-    are stable internals — same class of access as the session's own
-    ``_jsc`` — and the hygiene test pins the behavior.)
+    Unpersists every intermediate attached via :func:`own` and drops its
+    ``localCheckpoint`` blocks, then drops the frame's own. The frame
+    must not be used afterwards. A second release, or a release of a
+    frame that owns nothing and is not checkpoint-backed, is a no-op.
+    (PySpark has no public unpersist for checkpointed frames; the JVM
+    handles here are stable internals — same class of access as the
+    session's own ``_jsc`` — and the hygiene test pins the behavior.)
 
     Spark's cache manager is PLAN-keyed: unpersisting an intermediate
     also drops the blocks of a semantically identical persist made by
@@ -72,7 +73,13 @@ def release(df: DataFrame) -> None:
     owned = getattr(df, "_mkgc_owned", [])
     for dep in owned:
         dep.unpersist()
+        _drop_checkpoint(dep)
     owned.clear()
+    _drop_checkpoint(df)
+
+
+def _drop_checkpoint(df: DataFrame) -> None:
+    """Free the ``localCheckpoint`` blocks backing ``df``, if any."""
     plan = df._jdf.queryExecution().analyzed()
     if plan.getClass().getName().endswith(".LogicalRDD"):
         rdd = plan.rdd()

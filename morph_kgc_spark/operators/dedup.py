@@ -855,7 +855,8 @@ def keep_canonical(docs: DataFrame, pairs: DataFrame, id_col: str,
     docs compete for one slot even when no direct pair connects them.
     Singletons survive trivially with cluster_size 1.
 
-    Output: (``id_col``, cluster_id, cluster_size, score).
+    Output: (``id_col``, cluster_id, cluster_size, score). The result
+    owns the clustering's checkpoint: ``cache.release`` it when done.
 
     Scale shape: the clustering's iterative joins (see
     :func:`dup_clusters`), then ONE id-equi-join to attach scores and
@@ -882,14 +883,14 @@ def keep_canonical(docs: DataFrame, pairs: DataFrame, id_col: str,
                        F.col(id_col).alias("sid"))).alias("m"),
         F.count(F.lit(1)).alias("cluster_size"),
     )
-    return winners.select(
+    return cache.own(winners.select(
         F.col("m.sid").alias(id_col),
         "cluster_id",
         "cluster_size",
         F.when(F.col("m.ns") == F.lit(float("inf")),
                F.lit(None).cast("double"))
          .otherwise(-F.col("m.ns")).alias("score"),
-    )
+    ), [clusters])
 
 
 def embedding_dup_pairs(df: DataFrame, id_col: str, vec_col: str,

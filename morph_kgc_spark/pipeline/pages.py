@@ -19,8 +19,9 @@ Scale design:
 - per-mention scoring is an Arrow-batched pandas UDF (no per-row Python);
 - the page↔entity join skew (head entities) is handled by the
   deterministic salted join from operators/joins.py when linking back;
-- final dedup = partition-local dropDuplicates + hash-partitioned
-  distinct (compiler pipeline).
+- final dedup = the compiler's: a rule that renders injectively dedups
+  its referenced columns, any other group runs a hash-partitioned
+  distinct over its rendered triples.
 """
 
 from __future__ import annotations
@@ -283,11 +284,6 @@ def pipeline_triples(spark: SparkSession, pages: DataFrame,
 
     reg = SourceRegistry()
     reg.register("linked", linked)
-    # the label rule only reads (entity_iri, alias): dedup those BEFORE
-    # rendering — distinct-then-render emits the same set as
-    # render-then-distinct (the term is a pure function of the two
-    # columns) but renders ~|entities| rows instead of |mentions|
-    reg.register("alias_pairs", linked.select("entity_iri", "alias").distinct())
     reg.register("pages", pages_slim)
 
     page_tpl = "http://kg.example.org/page/{url}"
@@ -296,7 +292,7 @@ def pipeline_triples(spark: SparkSession, pages: DataFrame,
                subject=M.TermMap(M.TEMPLATE, page_tpl, M.IRI),
                predicate=M.TermMap(M.CONSTANT, KG + "mentions", M.IRI),
                object=M.TermMap(M.REFERENCE, "entity_iri", M.IRI)),
-        M.Rule(source=M.Source("df", "alias_pairs"),
+        M.Rule(source=M.Source("df", "linked"),
                subject=M.TermMap(M.REFERENCE, "entity_iri", M.IRI),
                predicate=M.TermMap(M.CONSTANT, KG + "label", M.IRI),
                object=M.TermMap(M.REFERENCE, "alias", M.LITERAL)),

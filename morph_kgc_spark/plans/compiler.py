@@ -18,22 +18,31 @@ Scale notes (100 TB target):
   columns first (``_project_executions``) and rendered from there;
 - referencing-object-map joins go through operators/joins.py which
   broadcasts small parents and can salt skewed keys;
-- set semantics = partition-local dedup at the scan (dropDuplicates is
-  already a partial+final hash aggregate) + one global distinct, pruned per
-  mapping-partition group (plans/partitioner.py).
+- set semantics = one distinct per mapping-partition group (groups the
+  partitioner proves disjoint need no global one, plans/partitioner.py).
+  A group whose only rule renders injectively (``_renders_injectively``)
+  skips its distinct over the rendered triples and dedups its narrow
+  referenced columns at the scan instead (dropDuplicates is already a
+  partial+final hash aggregate).
 """
 
 from __future__ import annotations
 
 import re
+from collections import Counter
 from typing import Callable, Iterable, Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from morph_kgc_spark import model as M
-from morph_kgc_spark.functions.encoding import _SAFE_CHARS, ntriples_escape_py
+from morph_kgc_spark.functions.encoding import (
+    _SAFE_CHARS,
+    _UNRESERVED,
+    ntriples_escape_py,
+)
 from morph_kgc_spark.functions.sqlexpr import (
+    natural_mapping_lossless,
     natural_mapping_sql,
     ntriples_escape_sql,
     percent_encode_sql,
@@ -144,17 +153,29 @@ _ABSOLUTE_IRI_RE = f"^{_SCHEME_RE}:"
 _INVALID_IRI_CHARS_RE = '[\\x00-\\x20<>"{}|\\\\^`]'
 
 
+def _base_fold(lead: str) -> Optional[bool]:
+    """Whether every row of an IRI term led by the constant text
+    ``lead`` is absolute (True) or relative (False), known at compile
+    time; None when it is decided per row. A lead that already carries
+    a scheme makes every row absolute; a non-empty lead that no suffix
+    can turn into a scheme (it is not all scheme characters) makes every
+    row relative."""
+    if re.match(_ABSOLUTE_IRI_RE, lead):
+        return True
+    if lead and not re.fullmatch(_SCHEME_RE, lead):
+        return False
+    return None
+
+
 def _resolve_base_sql(term: str, base_iri: str, lead: str) -> str:
     """Base-IRI resolution (R2RML: relative IRIs resolve against the
-    base), folded at compile time from ``lead``, the term's leading
-    constant text: a lead that already carries a scheme makes every row
-    absolute; a non-empty lead that no suffix can turn into a scheme
-    (it is not all scheme characters) makes every row relative. Any
-    other term is decided per row — RMLTC0019a has absolute and
+    base), folded at compile time from ``lead`` (:func:`_base_fold`).
+    Any other term is decided per row — RMLTC0019a has absolute and
     relative values in one column."""
-    if re.match(_ABSOLUTE_IRI_RE, lead):
+    absolute = _base_fold(lead)
+    if absolute:
         return term
-    if lead and not re.fullmatch(_SCHEME_RE, lead):
+    if absolute is not None:
         return f"concat({sql_str(base_iri)}, {term})"
     return (f"(CASE WHEN {term} RLIKE {sql_str(_ABSOLUTE_IRI_RE)} "
             f"THEN {term} ELSE concat({sql_str(base_iri)}, {term}) END)")
@@ -221,6 +242,92 @@ def _term_sql(tm: M.TermMap, *, datatype: Optional[str] = None,
     if tm.termtype == M.IRI and base_iri:
         term = _resolve_base_sql(term, base_iri, parts[0])
     return _wrap_sql(term, tm.termtype) if wrap else term
+
+
+def _term_injective(tm: Optional[M.TermMap], *, base_iri: str = "",
+                    datatype: Optional[str] = None,
+                    source_types: Optional[dict] = None) -> bool:
+    """Whether :func:`_term_sql` maps distinct values of ``tm``'s
+    references to distinct strings. False whenever in doubt.
+
+    - IRI template: ``quote(v, safe)`` is injective on valid UTF-8 while
+      ``%`` is not safe; two encoded values are told apart only by a
+      literal part holding a character the encoder always escapes
+      (``{a}{b}`` on ("1", "23") and ("12", "3") collide).
+    - plain reference IRI: emitted verbatim;
+    - base resolution must fold at compile time: the row-level CASE maps
+      ``a`` and ``<base>a`` to one IRI;
+    - blank node / literal: values are emitted raw (escaped), so one
+      reference at most, and a literal's natural mapping must be the
+      identity on its source column's type.
+    """
+    if tm is None or tm.kind == M.CONSTANT:
+        return True
+    if tm.kind == M.EXECUTION:
+        return False
+    template = tm.value if tm.kind == M.TEMPLATE else "{" + tm.value + "}"
+    parts, refs = _template_parts(template)
+    if tm.termtype == M.IRI:
+        if base_iri and _base_fold(parts[0]) is None:
+            return False
+        if tm.kind != M.TEMPLATE:
+            return True
+        safe = _SAFE_CHARS.get() or ""
+        if "%" in safe:
+            return False
+        # characters an encoded value can contain
+        kept = set(_UNRESERVED) | set(safe) | {"%"}
+        return all(set(part) - kept for part in parts[1:-1])
+    if len(refs) > 1:
+        return False
+    if tm.termtype == M.BLANK_NODE:
+        return True
+    return tm.termtype == M.LITERAL and all(
+        natural_mapping_lossless(datatype, (source_types or {}).get(r))
+        for r in refs)
+
+
+def _renders_injectively(rule: M.Rule, source_types: dict) -> bool:
+    """Whether :func:`compile_rule` renders distinct rows of the rule's
+    (deduped) referenced columns to distinct triples, so that
+    ``render(dedup(refs)) == distinct(render(refs))`` and the rendered
+    distinct can be skipped. ``source_types`` maps the child source's
+    columns to their Spark types before ``prepare_source`` casts them.
+
+    An inner join of two deduped inputs is a set of (child, parent)
+    pairs, so a join rule qualifies when every child and parent
+    reference is rendered by some term: a join key that reaches no term
+    (``c_nationkey`` under a nation-name object) lets two keys render
+    one triple. False whenever in doubt: gathers, quoted maps, subject
+    joins, FNML executions and non-constant datatype maps."""
+    if rule.gather is not None or rule.quoted_subject is not None \
+            or rule.quoted_object is not None or rule.subject_join_conditions:
+        return False
+    if rule.datatype is not None and rule.datatype.kind != M.CONSTANT:
+        return False
+    joined = rule.parent_source is not None
+    obj = rule.parent_subject if rule.parent_subject is not None else rule.object
+    if obj is None or (joined and not rule.join_conditions):
+        return False
+    lang = rule.language
+    # a language reference follows the literal's closing quote, the only
+    # unescaped '"' of the rendered literal
+    if lang is not None and lang.kind != M.CONSTANT and not (
+            lang.kind == M.REFERENCE and obj.termtype == M.LITERAL):
+        return False
+    datatype = rule.datatype.value if rule.datatype is not None else None
+    if not all(_term_injective(tm, base_iri=rule.base_iri)
+               for tm in (rule.subject, rule.predicate, rule.graph)) \
+            or not _term_injective(obj, base_iri=rule.base_iri,
+                                   datatype=datatype,
+                                   source_types=source_types):
+        return False
+    child_terms = [rule.subject, rule.predicate, rule.graph, lang]
+    if not joined:
+        child_terms.append(obj)
+    read = {r for tm in child_terms if tm is not None for r in tm.references}
+    return set(rule.references) <= read and (
+        not joined or set(rule.parent_references) <= set(obj.references))
 
 
 def compile_term(tm: M.TermMap, *, datatype: Optional[str] = None,
@@ -351,15 +458,21 @@ def compile_rule(spark: SparkSession, rule: M.Rule,
                  dedup_source: bool = True) -> DataFrame:
     """Compile one rule into a DataFrame(subject, predicate, object[, graph]).
 
-    ``dedup_source=False`` skips the scan-level dropDuplicates: when a
+    The scan-level dropDuplicates runs over the referenced columns, which
+    are far narrower than the rendered triple. When the rule renders
+    injectively (:func:`_renders_injectively`) the result is then
+    already a set, and materialize_rules skips the group's rendered
+    distinct.
+
+    ``dedup_source=False`` skips that dropDuplicates: when a
     set-semantics distinct runs downstream anyway, dedup(refs) → render →
     distinct and render → distinct produce the same set, and the early
     dedup is a pure extra shuffle (rendered terms are functions of the
-    refs). materialize_rules passes False exactly for simple projection
-    rules inside distinct groups; JOIN rules keep the pre-join dedup —
-    duplicate keys would multiply join output before the distinct could
-    collapse it (the reference preprocess dedups for the same reason,
-    materializer.py:37-55).
+    refs). materialize_rules passes False for projection rules in groups
+    that keep their rendered distinct; JOIN rules keep the pre-join
+    dedup — duplicate keys would multiply join output before the
+    distinct could collapse it (the reference preprocess dedups for the
+    same reason, materializer.py:37-55).
     """
     if rule.gather is not None:
         return _compile_gather_rule(spark, rule, load_source, na_values)
@@ -647,6 +760,18 @@ def _quoted_triple_col(sub_rule: M.Rule, col_prefix: str = "") -> Column:
     return F.expr(_quoted_triple_sql(sub_rule, col_prefix))
 
 
+def _source_types(spark: SparkSession, rule: M.Rule,
+                  load_source: SourceLoader) -> dict:
+    """Spark types of the rule's source columns, before ``prepare_source``
+    casts them to string. Empty for rules that read no source columns
+    (compiled over a one-row placeholder) and gathers (loaded with their
+    own options), so their sources are not loaded here."""
+    if not rule.references or rule.gather is not None:
+        return {}
+    schema = load_source(spark, rule.source).schema
+    return {f.name: f.dataType for f in schema.fields}
+
+
 def materialize_rules(spark: SparkSession, rules: list[M.Rule],
                       load_source: SourceLoader,
                       distinct: bool = True,
@@ -657,26 +782,39 @@ def materialize_rules(spark: SparkSession, rules: list[M.Rule],
     groups proven disjoint by the partitioner are unioned WITHOUT a second
     global distinct — the reference's signature optimization
     (mapping_partitioner.py:159-358) re-expressed as shuffle pruning.
+
+    A labelled group whose only rule renders injectively
+    (:func:`_renders_injectively`) runs no distinct over its rendered
+    triples: it dedups its referenced columns instead, and
+    ``render(dedup(refs))`` is already the set ``distinct(render(refs))``
+    — the reference's own order (preprocess ``drop_duplicates``,
+    materializer.py:37-55), with the shuffle carrying the narrow
+    columns rather than the N-Triples strings.
     """
     if not rules:
         raise ValueError("no rules to materialize")
 
     n_graph = any(r.graph is not None for r in rules)
+    group_sizes = Counter(r.mapping_partition for r in rules)
     frames: dict[str, DataFrame] = {}
+    narrow: set[str] = set()
     for i, rule in enumerate(rules):
-        # each rule's branch ends in a distinct (per-group or global)
+        key = rule.mapping_partition or f"__rule_{i}"
+        if distinct and rule.mapping_partition and group_sizes[key] == 1 \
+                and _renders_injectively(
+                    rule, _source_types(spark, rule, load_source)):
+            narrow.add(key)
+        # every other branch ends in a distinct (per-group or global)
         # whenever set semantics are on — the scan-level dedup is then a
         # redundant extra exchange for projection-only rules
         df = compile_rule(spark, rule, load_source, na_values=na_values,
-                          dedup_source=not distinct)
+                          dedup_source=not distinct or key in narrow)
         if n_graph and "graph" not in df.columns:
             df = df.withColumn("graph", F.lit(None).cast("string"))
-        key = rule.mapping_partition or f"__rule_{i}"
         frames[key] = frames[key].unionAll(df) if key in frames else df
 
-    parts = list(frames.values())
-    if distinct:
-        parts = [p.distinct() for p in parts]
+    parts = [p if not distinct or k in narrow else p.distinct()
+             for k, p in frames.items()]
     out = parts[0]
     for p in parts[1:]:
         out = out.unionAll(p)

@@ -161,3 +161,19 @@ def test_release_frees_chained_ownership_once(spark):
     release(docs.where("doc_id >= 0"))
     assert persistent_rdd_ids(spark) == live
     again.unpersist()
+
+
+def test_keep_canonical_release_frees_cluster_checkpoint(spark):
+    """keep_canonical's result is a derivative of dup_clusters'
+    checkpointed frame; it owns that frame, so release(result) frees its
+    blocks and repeated calls leave the session cache-clean."""
+    docs = spark.range(0, 40).select(F.col("id").alias("doc_id"),
+                                     F.lit("x").alias("text"))
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 38, 2)], ["id_a", "id_b"])
+    before = persistent_rdd_ids(spark)
+    for _ in range(3):
+        out = D.keep_canonical(docs, pairs, "doc_id", F.length("text"))
+        assert out.count() == 21
+        release(out)
+    assert persistent_rdd_ids(spark) == before

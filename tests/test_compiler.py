@@ -1,13 +1,21 @@
 """Core term-materialization semantics, mirrored from the reference's
 behavior (src/morph_kgc/materializer.py:106-163)."""
 
+import re
+from datetime import datetime
+
 import pandas as pd
 import pytest
 
 from morph_kgc_spark import model as M
 from morph_kgc_spark.engine import materialize
-from morph_kgc_spark.functions.encoding import ntriples_escape_py, percent_encode_py
-from morph_kgc_spark.plans.compiler import compile_rule
+from morph_kgc_spark.functions.builtins import GREL
+from morph_kgc_spark.functions.encoding import (
+    ntriples_escape_py,
+    percent_encode_py,
+    safe_encoding_context,
+)
+from morph_kgc_spark.plans.compiler import compile_rule, materialize_rules
 from morph_kgc_spark.sources.registry import default_registry
 
 EX = "http://example.com/"
@@ -258,3 +266,109 @@ def test_base_iri_resolution_folds_at_compile_time(spark, subject, expected,
         == expected
     assert ("RLIKE" in _term_sql(subject, base_iri=rule.base_iri)) \
         == row_level
+
+
+# --- narrow distincts: injective rules dedup refs, not rendered triples ------
+
+def _reg_rows(spark, **tables):
+    """{name: (rows, ddl schema)} → registry of in-memory sources."""
+    reg = default_registry()
+    for name, (rows, schema) in tables.items():
+        reg.register(name, spark.createDataFrame(rows, schema))
+    return reg
+
+
+def _rendered_distinct(df) -> bool:
+    """True when the optimized plan aggregates over the rendered terms."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return any(re.search(r"\b(subject|object)#", keys)
+               for keys in re.findall(r"Aggregate \[([^\]]*)\]", plan))
+
+
+def _rule(subject, obj, source="t", **kw):
+    return M.Rule(source=M.Source("df", source), subject=subject,
+                  predicate=M.TermMap(M.CONSTANT, EX + "p", M.IRI),
+                  object=obj, **kw)
+
+
+_DUP_AB = ([("x", "y"), ("x", "y"), ("x/y", "z"), ("a b", "é")],
+           "a string, b string")
+_LINEITEM_JOIN = _rule(
+    M.TermMap(M.TEMPLATE, EX + "lineitem/{l_orderkey}/{l_linenumber}", M.IRI),
+    None, source="lineitem",
+    parent_source=M.Source("df", "orders"),
+    parent_subject=M.TermMap(M.TEMPLATE,
+                             EX + "order/{o_orderkey}/{o_orderstatus}", M.IRI),
+    join_conditions=(M.JoinCondition("l_orderkey", "o_orderkey"),))
+
+
+@pytest.mark.parametrize("rule,tables", [
+    (_rule(M.TermMap(M.TEMPLATE, EX + "{a}", M.IRI),
+           M.TermMap(M.CONSTANT, EX + "C", M.IRI)), {"t": _DUP_AB}),
+    (_rule(M.TermMap(M.TEMPLATE, EX + "{a}/{b}", M.IRI),
+           M.TermMap(M.CONSTANT, EX + "C", M.IRI)), {"t": _DUP_AB}),
+    (_rule(M.TermMap(M.CONSTANT, EX + "s", M.IRI),
+           M.TermMap(M.REFERENCE, "a", M.LITERAL),
+           language=M.TermMap(M.REFERENCE, "b")), {"t": _DUP_AB}),
+    (_rule(M.TermMap(M.CONSTANT, EX + "s", M.IRI),
+           M.TermMap(M.REFERENCE, "ts", M.LITERAL),
+           datatype=M.TermMap(M.CONSTANT, M.XSD_DATETIME, M.IRI)),
+     {"t": ([(datetime(2020, 1, 1),), (datetime(2020, 1, 1),),
+             (datetime(2020, 1, 1, 0, 0, 1),)], "ts timestamp")}),
+    (_LINEITEM_JOIN,
+     {"lineitem": ([("1", "1"), ("1", "1"), ("1", "2"), ("2", "1")],
+                   "l_orderkey string, l_linenumber string"),
+      "orders": ([("1", "F"), ("1", "F"), ("2", "O"), ("2", "P")],
+                 "o_orderkey string, o_orderstatus string")}),
+], ids=["iri-one-ref", "iri-slash-sep", "literal-lang-ref",
+        "timestamp-datetime", "lineitem-join"])
+def test_injective_rule_skips_rendered_distinct(spark, rule, tables):
+    reg = _reg_rows(spark, **tables)
+    narrow = materialize_rules(spark, [rule.but(mapping_partition="g")], reg)
+    wide = materialize_rules(spark, [rule], reg)  # unlabelled: render → distinct
+    assert not _rendered_distinct(narrow) and _rendered_distinct(wide)
+    rows = [tuple(r) for r in narrow.collect()]
+    assert len(rows) == len(set(rows))
+    assert set(rows) == {tuple(r) for r in wide.collect()}
+
+
+@pytest.mark.parametrize("rule,tables,safe,expected", [
+    (_rule(M.TermMap(M.TEMPLATE, EX + "{a}{b}", M.IRI),
+           M.TermMap(M.CONSTANT, EX + "C", M.IRI)),
+     {"t": ([("1", "23"), ("12", "3")], "a string, b string")}, None, 1),
+    (_rule(M.TermMap(M.TEMPLATE, EX + "{a}/{b}", M.IRI),
+           M.TermMap(M.CONSTANT, EX + "C", M.IRI)),
+     {"t": ([("x/y", "z"), ("x", "y/z")], "a string, b string")}, "/", 1),
+    (_rule(M.TermMap(M.CONSTANT, EX + "s", M.IRI),
+           M.TermMap(M.REFERENCE, "a", M.LITERAL),
+           datatype=M.TermMap(M.CONSTANT, M.XSD_DATETIME, M.IRI)),
+     {"t": ([("2020-01-01 00:00:00",), ("2020-01-01T00:00:00",)],
+            "a string")}, None, 1),
+    (_rule(M.TermMap(M.REFERENCE, "a", M.IRI),
+           M.TermMap(M.CONSTANT, EX + "C", M.IRI), base_iri=EX),
+     {"t": ([("a",), (EX + "a",)], "a string")}, None, 1),
+    (_rule(M.TermMap(M.TEMPLATE, EX + "customer/{c_custkey}", M.IRI), None,
+           source="customer", parent_source=M.Source("df", "nation"),
+           parent_subject=M.TermMap(M.TEMPLATE, EX + "nation/{n_name}", M.IRI),
+           join_conditions=(M.JoinCondition("c_nationkey", "n_nationkey"),)),
+     {"customer": ([("1", "1"), ("1", "2")], "c_custkey string, c_nationkey string"),
+      "nation": ([("1", "X"), ("2", "X")], "n_nationkey string, n_name string")},
+     None, 1),
+    (_rule(M.TermMap(M.CONSTANT, EX + "s", M.IRI),
+           M.TermMap(M.TEMPLATE, "{a} {b}", M.LITERAL)),
+     {"t": ([("a b", "c"), ("a", "b c")], "a string, b string")}, None, 1),
+    (_rule(M.TermMap(M.CONSTANT, EX + "s", M.IRI),
+           M.TermMap(M.EXECUTION, GREL + "toUpperCase", M.LITERAL,
+                     args=(("string", M.TermMap(M.REFERENCE, "a")),))),
+     {"t": ([("a",), ("A",)], "a string")}, None, 1),
+], ids=["iri-no-separator", "iri-safe-separator", "datetime-on-string",
+        "reference-under-base", "join-key-not-rendered",
+        "two-ref-literal", "fnml-upper"])
+def test_non_injective_rule_keeps_rendered_distinct(spark, rule, tables,
+                                                    safe, expected):
+    """Rows chosen so that distinct ref tuples render one triple: a
+    dropped distinct would emit it twice."""
+    reg = _reg_rows(spark, **tables)
+    with safe_encoding_context(safe):
+        out = materialize_rules(spark, [rule.but(mapping_partition="g")], reg)
+    assert out.count() == expected

@@ -17,6 +17,14 @@ def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _formatted_plan(df) -> str:
+    """The plan with every node's expressions: a render folded into an
+    aggregate's results (a rule deduped on its references) shows here,
+    not in the one-line-per-node tree string."""
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+
+
 import pytest
 
 
@@ -57,7 +65,7 @@ def test_template_stays_in_codegen(spark):
     # the concat tree for templates must not appear under a python eval
     # (only the percent-encode UDF is python, fed by the when() branch)
     df = entrymod.q_kg_rdf_type(spark, SF)  # numeric key: no dirty rows
-    plan = _executed_plan(df)
+    plan = _formatted_plan(df)
     assert "concat(<, http://example.com/supplier/" in plan
 
 
@@ -85,7 +93,7 @@ def test_no_python_worker_in_kg_plans(spark):
 
 def test_url_encode_expression_present(spark):
     """Templates with string refs use the native url_encode chain."""
-    plan = _executed_plan(entrymod.q_kg_customer_triples(spark, SF))
+    plan = _formatted_plan(entrymod.q_kg_customer_triples(spark, SF))
     assert "UrlCodec.encode" in plan or "url_encode" in plan
 
 
