@@ -569,95 +569,185 @@ def ngram_capped_pairs(df: DataFrame, id_col: str, text_col: str,
     return out if lazy else out.localCheckpoint()
 
 
+# stored-edge bound up to which dup_clusters finishes the components in
+# ONE executor task (numpy over the whole edge list) instead of Spark
+# rounds; sized in CHANGES.md (a forced-local graph of this many edges)
+_CC_LOCAL_MAX_EDGES = 8_000_000
 # dup-graph node count up to which every CC round joins against a
 # broadcast label table (1M rows ≈ tens of MB); above it the rounds
 # shuffle-join, the 100 TB shape
 _CC_BROADCAST_MAX_NODES = 1_000_000
-# stored pair count up to which CC keeps both edge orientations (see the
-# edge-storage note in dup_clusters)
+# stored pair count up to which the CC rounds keep both edge
+# orientations (see the edge-storage note in _cc_rounds)
 _CC_DUAL_EDGE_MAX = 25_000_000
 
 
 def dup_clusters(ids: DataFrame, pairs: DataFrame, id_col: str,
                  max_iterations: int = 50,
-                 dense: bool | None = None) -> DataFrame:
+                 edge_bound: int | None = None) -> DataFrame:
     """Connected components over near-dup pairs → (id, cluster_id).
 
     ``cluster_id`` is the minimum member id of each component — the
     canonical survivor for a keep-one-per-cluster dedup policy.
-    Min-label propagation to fixpoint: each round every node takes the
-    min of its own label and its neighbors' labels, converging in
-    O(component diameter) rounds (pointer doubling makes it
-    O(log diameter)) — near-dup clusters are dense and shallow, so 2-4
-    rounds in practice. Each round ends in a ``localCheckpoint``:
-    iterative joins otherwise chain the entire lineage, and the logical
-    plan grows until plan processing itself blows up — the standard
-    Spark iterative-algorithm discipline (GraphX/Pregel does the same).
-    The driver only ever sees a changed-row COUNT.
 
-    The iteration runs over DUP-GRAPH NODES ONLY — ids that never
-    appear in a pair cannot change label, so they skip the rounds
-    entirely and are appended once at the end via one anti-join (at
-    100 TB the dup graph is orders of magnitude smaller than the
-    corpus, so per-round cost scales with |V(dup graph)|, not
-    |corpus|). Components are computed over the subgraph INDUCED ON
-    ``ids``: pairs touching an id outside ``ids`` are dropped up front
-    (two broadcast-able semi-joins, paid once), so the output has
-    exactly one row per input id and every cluster_id is an input id.
+    Components are computed over the subgraph INDUCED ON ``ids``: pairs
+    touching an id outside ``ids`` are dropped up front (two
+    broadcast-able semi-joins, paid once), so the output has exactly
+    one row per input id and every cluster_id is an input id. Only
+    DUP-GRAPH NODES (ids in some pair) enter the component search; the
+    rest are their own cluster and are appended once at the end via one
+    anti-join (at 100 TB the dup graph is orders of magnitude smaller
+    than the corpus).
 
-    Plan shape: the pair stream is read ONCE; the edge table is
-    hash-partitioned on ``dst`` exactly once, then checkpointed WITH
-    that partitioning. ``dense`` picks the edge layout (both
-    orientations when False, one when True; ``None`` decides from a
-    staging count against ``_CC_DUAL_EDGE_MAX`` — see the note at the
-    decision site). The label table is one row per dup-graph node,
-    known exactly after one count; up to ``_CC_BROADCAST_MAX_NODES``
-    rows every per-round join is a map-side BroadcastHashJoin and the
-    dst-side neighbor-min aggregate reuses the edges' partitioning —
-    ZERO exchanges per sparse-mode round. Above it the rounds fall back
-    to shuffle joins (the 100 TB shape). The fixpoint — and therefore
-    the output — is identical in every mode; only storage layout and
-    join strategy differ (the decisions AQE would make from runtime
-    sizes, taken here from exact counts because checkpointed RDDs
-    carry no size statistics).
+    ``edge_bound`` is the caller's upper bound on the stored pairs
+    (``None``: count them from a staging checkpoint). It picks the
+    finish, with the same output either way:
+
+    - up to ``_CC_LOCAL_MAX_EDGES`` a LOCAL FINISH (Kiveris et al.,
+      SoCC 2014: finish in memory once the graph is small): the edge
+      stream goes through ``repartition(1)`` into ONE ``mapInPandas``
+      task that runs numpy min-label hooking with pointer jumping to
+      fixpoint — one stage, never collected to the driver;
+    - above it, Spark min-label propagation ROUNDS (``_cc_rounds``),
+      each ending in a ``localCheckpoint``, at most ``max_iterations``
+      of them. Each round every node takes the min of its own and its
+      neighbors' labels, then follows its label's label (pointer
+      doubling), so rounds grow with log(diameter). Near-dup graphs are
+      not shallow: at 32 bits / hamming 6 false-positive edges chain
+      clusters, and the 5k-doc benchmark corpus needs 7 round jobs.
+      Above ``_CC_DUAL_EDGE_MAX`` the rounds keep single-direction
+      edges, above ``_CC_BROADCAST_MAX_NODES`` nodes they shuffle-join
+      instead of broadcasting the label table (the 100 TB shape).
     """
     from morph_kgc_spark.operators.cache import release
 
     id_set = ids.select(F.col(id_col).alias("node"))
-    pairs_in = (
+    edges = (
         pairs.join(id_set.withColumnRenamed("node", "id_a"), "id_a",
                    "left_semi")
         .join(id_set.withColumnRenamed("node", "id_b"), "id_b", "left_semi")
+        .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
+    staged = None
+    if edge_bound is None:
+        # staged hash-partitioned on dst: the rounds' layout, so the
+        # staging pass is reused by whichever finish runs
+        staged = (edges.repartition(
+            ids.sparkSession.sparkContext.defaultParallelism, "dst")
+            .localCheckpoint(eager=False))
+        edge_bound = staged.count()
+        edges = staged
+    if edge_bound <= _CC_LOCAL_MAX_EDGES:
+        # checkpointed (lazily): the union and the anti-join below both
+        # read the labels, and the task would otherwise run once for each
+        labels = (_cc_local(edges, ids.schema[id_col].dataType)
+                  .localCheckpoint(eager=False))
+        held = [labels]
+    else:
+        labels, held = _cc_rounds(edges, staged is not None,
+                                  edge_bound > _CC_DUAL_EDGE_MAX,
+                                  max_iterations)
+    # singletons (never in a pair) are their own cluster: one anti-join
+    # against the dup-node set, paid once — not once per round
+    singletons = (
+        ids.select(F.col(id_col).alias("node"))
+        .join(labels.select("node"), "node", "left_anti")
+        .select("node", F.col("node").alias("lbl"))
+    )
+    # the result is checkpointed BEFORE its inputs are released: the
+    # checkpoints behind `labels` cannot be recomputed once released
+    out = (labels.unionAll(singletons)
+           .select(F.col("node").alias(id_col),
+                   F.col("lbl").alias("cluster_id")).localCheckpoint())
+    for df in held + [staged]:
+        if df is not None:
+            release(df)
+    return out
+
+
+def _cc_local(edges: DataFrame, id_type) -> DataFrame:
+    """(node, lbl) for every node of the (src, dst) edge stream, from one
+    ``mapInPandas`` task. The task body is self-contained (numpy and
+    pandas only), so workers need not import this package."""
+    from pyspark.sql.types import StructField, StructType
+
+    def components(batches):
+        import numpy as np
+        import pandas as pd
+
+        parts = [b.to_numpy() for b in batches]
+        if not parts:
+            return
+        flat = np.concatenate(parts).ravel()
+        del parts
+        # dense ranks in id order: the smallest rank is the smallest id
+        nodes, idx = np.unique(flat, return_inverse=True)
+        del flat
+        idx = idx.reshape(-1, 2)
+        u, v = idx[:, 0], idx[:, 1]
+        lbl = np.arange(nodes.size)
+        while u.size:
+            # hook: each root takes the least root across its live
+            # edges — pointers only go down, so no cycles form ...
+            ru, rv = lbl[u], lbl[v]
+            live = ru != rv
+            u, v, ru, rv = u[live], v[live], ru[live], rv[live]
+            np.minimum.at(lbl, ru, rv)
+            np.minimum.at(lbl, rv, ru)
+            # ... then jump: every node points straight at its root.
+            # An edge whose ends share a root stays inside one
+            # component for good, so the live set shrinks every round;
+            # at fixpoint each component's root is its least rank.
+            while True:
+                up = lbl[lbl]
+                if np.array_equal(up, lbl):
+                    break
+                lbl = up
+        yield pd.DataFrame({"node": nodes, "lbl": nodes[lbl]})
+
+    schema = StructType([StructField("node", id_type),
+                         StructField("lbl", id_type)])
+    return edges.repartition(1).mapInPandas(components, schema)
+
+
+def _cc_rounds(src: DataFrame, staged: bool, dense: bool,
+               max_iterations: int) -> tuple[DataFrame, list[DataFrame]]:
+    """Spark min-label propagation over the (src, dst) edges →
+    ``(labels, held)``: labels is (node, lbl) per dup-graph node, and
+    ``held`` the checkpoints behind it, for the caller to release once
+    its result is materialized. ``staged``: ``src`` is already the
+    dst-partitioned staging checkpoint.
+
+    Each round ends in a ``localCheckpoint``: iterative joins otherwise
+    chain the entire lineage, and the logical plan grows until plan
+    processing itself blows up — the standard Spark iterative-algorithm
+    discipline (GraphX/Pregel does the same). The driver only ever sees
+    a changed-row COUNT.
+
+    Plan shape: the edge table is hash-partitioned on ``dst`` exactly
+    once, then checkpointed WITH that partitioning. The label table is
+    one row per dup-graph node, known exactly after one count; up to
+    ``_CC_BROADCAST_MAX_NODES`` rows every per-round join is a map-side
+    BroadcastHashJoin and the dst-side neighbor-min aggregate reuses the
+    edges' partitioning — ZERO exchanges per doubled-edge round. Above
+    it the rounds fall back to shuffle joins. The fixpoint is identical
+    in every mode; only storage layout and join strategy differ (the
+    decisions AQE would make from runtime sizes, taken here from exact
+    counts because checkpointed RDDs carry no size statistics).
+    """
+    from morph_kgc_spark.operators.cache import release
+
     # EDGE STORAGE is tiered (round 7, sf1.0 hardening): the dense
     # synthetic corpus reaches 10^8 true pairs at sf1.0 and a doubled
     # (both orientations) edge checkpoint OOMed a 16 GB local heap.
-    # SPARSE graphs (≤ _CC_DUAL_EDGE_MAX stored pairs) store both
+    # Graphs up to _CC_DUAL_EDGE_MAX stored pairs store both
     # directions — per-round neighbor-min is then ONE partitioning-
     # reusing aggregate; DENSE graphs keep a single direction (half the
     # storage) and each round aggregates BOTH sides of it (two scans of
     # half the data: same bytes read, two extra node-sized exchanges).
-    # ``dense=None`` decides from a staging checkpoint's exact count;
-    # callers that can bound the edge count up front
-    # (simhash_dup_clusters's banded candidate bound) pass the regime
-    # explicitly and skip the staging pass. The fixpoint — and
-    # therefore the output — is identical in every mode.
-    n_parts = ids.sparkSession.sparkContext.defaultParallelism
-    if dense is None:
-        edges1 = (
-            pairs_in.select(F.col("id_a").alias("src"),
-                            F.col("id_b").alias("dst"))
-            .repartition(n_parts, "dst")
-            .localCheckpoint(eager=False)
-        )
-        dense = edges1.count() > _CC_DUAL_EDGE_MAX
-        src = edges1
-    else:
-        edges1 = None
-        src = pairs_in.select(F.col("id_a").alias("src"),
-                              F.col("id_b").alias("dst"))
+    n_parts = src.sparkSession.sparkContext.defaultParallelism
     if dense:
-        edges = src if edges1 is not None else (
+        edges = src if staged else (
             src.repartition(n_parts, "dst").localCheckpoint(eager=False))
     else:
         edges = (
@@ -691,10 +781,10 @@ def dup_clusters(ids: DataFrame, pairs: DataFrame, id_col: str,
     # one count materializes the checkpoints (labels scans edges) and
     # yields the EXACT node count for the broadcast-vs-shuffle decision
     n_nodes = labels.count()
-    if edges1 is not None and edges is not edges1:
+    if staged and edges is not src:
         # the doubled table is materialized now — the single-direction
         # staging checkpoint is dead weight
-        release(edges1)
+        release(src)
     bcast = (lambda df: F.broadcast(df)) \
         if n_nodes <= _CC_BROADCAST_MAX_NODES else (lambda df: df)
 
@@ -760,22 +850,7 @@ def dup_clusters(ids: DataFrame, pairs: DataFrame, id_col: str,
         labels = new_labels.select("node", "lbl")
         if changed == 0:
             break
-    # singletons (never in a pair) are their own cluster: one anti-join
-    # against the dup-node set, paid once — not once per round
-    singletons = (
-        ids.select(F.col(id_col).alias("node"))
-        .join(labels.select("node"), "node", "left_anti")
-        .select("node", F.col("node").alias("lbl"))
-    )
-    # the result is checkpointed BEFORE its inputs are released: the
-    # final round's blocks back `labels`, and a checkpointed plan
-    # cannot recompute released dependencies
-    out = (labels.unionAll(singletons)
-           .select(F.col("node").alias(id_col),
-                   F.col("lbl").alias("cluster_id")).localCheckpoint())
-    release(edges)
-    release(prev)
-    return out
+    return labels, [edges, prev]
 
 
 def simhash_dup_clusters(df: DataFrame, id_col: str, text_col: str,
@@ -799,15 +874,17 @@ def simhash_dup_clusters(df: DataFrame, id_col: str, text_col: str,
     pair (sf1.0: 164M raw doc pairs become 54M signature pairs; the
     5k-doc benchmark corpus: 15.7k become 9.5k).
 
-    The CC edge layout comes from a ~free DENSITY PROBE over the
+    The CC finish comes from a ~free DENSITY PROBE over the
     representatives: the banded self-join's candidate volume is
     Σ n·(n−1)/2 over (band, value) groups, an upper bound on the pairs
     CC stores, and simhash bands have at most n_bands · 2^(bits/n_bands)
     distinct keys (112 at 32/7) — one map-side-combined aggregate
-    collecting ~a hundred rows at ANY corpus size. Above
-    ``_CC_DUAL_EDGE_MAX`` candidates CC runs in dense single-direction
-    edge mode, otherwise in the doubled-edge mode — the decision
-    ``dup_clusters(dense=None)`` would take, without its staging pass.
+    collecting ~a hundred rows at ANY corpus size. It goes to
+    :func:`dup_clusters` as ``edge_bound``, which picks the one-task
+    local finish, doubled-edge rounds or single-direction rounds from
+    it without a staging count. The bound is loose (the 5k-doc
+    benchmark corpus: 4.45M candidates for 9.5k pairs), so the local
+    threshold is sized on real edges, not on the bound.
     """
     if n_bands is None:
         n_bands = max_hamming + 1
@@ -824,7 +901,7 @@ def simhash_dup_clusters(df: DataFrame, id_col: str, text_col: str,
     cand_bound = sum(r["count"] * (r["count"] - 1) // 2 for r in band_counts)
     pairs = _simhash_pairs_from_sig(reps, id_col, max_hamming, bits, n_bands)
     rc = dup_clusters(reps.select(id_col), pairs, id_col,
-                      dense=cand_bound > _CC_DUAL_EDGE_MAX)
+                      edge_bound=cand_bound)
     rep_clusters = rc.withColumnRenamed(id_col, "__rep")
     # a NULL text has no tokens, hence no signature: it is its own
     # singleton cluster (a non-NULL string always splits into ≥ 1 token)

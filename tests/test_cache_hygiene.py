@@ -121,7 +121,8 @@ def test_materialize_releases_persisted_sources(spark):
     assert persistent_rdd_ids(spark) == before
 
 
-def test_dup_clusters_releases_round_blocks(spark):
+def test_dup_clusters_releases_round_blocks(spark, monkeypatch):
+    monkeypatch.setattr(D, "_CC_LOCAL_MAX_EDGES", -1)  # force the rounds
     before = persistent_rdd_ids(spark)
     ids = spark.range(0, 40).select(F.col("id").alias("doc_id"))
     pairs = spark.createDataFrame(
@@ -132,6 +133,22 @@ def test_dup_clusters_releases_round_blocks(spark):
     leaked = persistent_rdd_ids(spark) - before
     assert len(leaked) <= 1, \
         f"iteration checkpoints must be released per round, got {leaked}"
+    release(out)
+    assert persistent_rdd_ids(spark) - before == set()
+
+
+@pytest.mark.parametrize("edge_bound", [None, 19])
+def test_dup_clusters_local_finish_releases_blocks(spark, edge_bound):
+    """The one-task local finish (counted or given a bound) leaves only
+    its result's blocks behind, and release(out) frees those."""
+    before = persistent_rdd_ids(spark)
+    ids = spark.range(0, 40).select(F.col("id").alias("doc_id"))
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 38, 2)], ["id_a", "id_b"])
+    out = D.dup_clusters(ids, pairs, "doc_id", edge_bound=edge_bound)
+    rows = {(r.doc_id, r.cluster_id) for r in out.collect()}
+    assert (1, 0) in rows and (39, 39) in rows and len(rows) == 40
+    assert len(persistent_rdd_ids(spark) - before) <= 1
     release(out)
     assert persistent_rdd_ids(spark) - before == set()
 

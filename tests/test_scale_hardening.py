@@ -140,11 +140,13 @@ def test_dup_clusters_components(spark):
     assert out == {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 4, 6: 4, 7: 7, 8: 7, 9: 9}
 
 
-def test_dup_clusters_long_chain_pointer_doubling(spark):
+def test_dup_clusters_long_chain_pointer_doubling(spark, monkeypatch):
     """A 40-node path converges well inside max_iterations thanks to
     pointer doubling (plain propagation would need ~40 rounds)."""
+    from morph_kgc_spark.operators import dedup as D
     from morph_kgc_spark.operators.dedup import dup_clusters
 
+    monkeypatch.setattr(D, "_CC_LOCAL_MAX_EDGES", -1)  # force the rounds
     n = 40
     ids = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
     pairs = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
@@ -296,12 +298,12 @@ def test_simhash_contraction_parity(spark):
 
 def _spy_dup_clusters(D, monkeypatch):
     """Record what simhash_dup_clusters hands dup_clusters: the
-    representative count, the pair count and the edge layout."""
+    representative count, the pair count and the edge bound."""
     seen = []
     real = D.dup_clusters
 
     def spy(ids, pairs, id_col, **kw):
-        seen.append((ids.count(), pairs.count(), kw.get("dense")))
+        seen.append((ids.count(), pairs.count(), kw.get("edge_bound")))
         return real(ids, pairs, id_col, **kw)
 
     monkeypatch.setattr(D, "dup_clusters", spy)
@@ -318,7 +320,7 @@ def test_simhash_all_duplicate_corpus(spark, monkeypatch):
         [(i, "the same small text") for i in range(40)], "doc_id long, text string")
     rows = _cluster_rows(
         D.simhash_dup_clusters(docs, "doc_id", "text", max_hamming=6))
-    assert seen == [(1, 0, False)]
+    assert seen == [(1, 0, 0)]
     assert {c for _, c in rows} == {0} and len(rows) == 40
 
 
@@ -348,28 +350,41 @@ def test_simhash_null_text_is_its_own_cluster(spark):
 
 
 def test_simhash_edge_layout_follows_band_probe(spark, monkeypatch):
-    """The representatives' band-probe bound picks the CC edge layout:
-    doubled edges below _CC_DUAL_EDGE_MAX, single-direction above —
-    with the same clusters either way."""
+    """The representatives' band-probe bound reaches dup_clusters as
+    ``edge_bound`` and picks the round layout: doubled edges below
+    _CC_DUAL_EDGE_MAX, single-direction above — with the same clusters
+    either way."""
     from morph_kgc_spark.operators import dedup as D
 
+    monkeypatch.setattr(D, "_CC_LOCAL_MAX_EDGES", -1)  # force the rounds
     seen = _spy_dup_clusters(D, monkeypatch)
+    layouts = []
+    real_rounds = D._cc_rounds
+
+    def rounds_spy(src, staged, dense, max_iterations):
+        layouts.append(dense)
+        return real_rounds(src, staged, dense, max_iterations)
+
+    monkeypatch.setattr(D, "_cc_rounds", rounds_spy)
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     sparse = _cluster_rows(
         D.simhash_dup_clusters(docs, "doc_id", "text", max_hamming=6))
     monkeypatch.setattr(D, "_CC_DUAL_EDGE_MAX", 0)
     dense = _cluster_rows(
         D.simhash_dup_clusters(docs, "doc_id", "text", max_hamming=6))
-    assert [d for _, _, d in seen] == [False, True]
-    assert seen[0][1] > 0 and dense == sparse
+    assert layouts == [False, True]
+    (_, n_pairs, bound), again = seen
+    assert again == seen[0] and bound >= n_pairs > 0
+    assert dense == sparse
 
 
 def test_dup_clusters_dense_mode_parity(spark, monkeypatch):
-    """dense=True (single-direction edges, both-side per-round
-    aggregates) and the dense=None staging decision must yield the
-    same fixpoint as the sparse doubled-edge mode."""
+    """An edge bound above _CC_DUAL_EDGE_MAX (single-direction edges,
+    both-side per-round aggregates) and the edge_bound=None staging
+    decision must yield the same fixpoint as the doubled-edge rounds."""
     from morph_kgc_spark.operators import dedup as D
 
+    monkeypatch.setattr(D, "_CC_LOCAL_MAX_EDGES", -1)  # force the rounds
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     ids = docs.select("doc_id")
 
@@ -378,12 +393,12 @@ def test_dup_clusters_dense_mode_parity(spark, monkeypatch):
                                lazy=True)
 
     sparse = _cluster_rows(D.dup_clusters(ids, pairs(), "doc_id",
-                                          dense=False))
-    dense = _cluster_rows(D.dup_clusters(ids, pairs(), "doc_id",
-                                         dense=True))
+                                          edge_bound=0))
+    dense = _cluster_rows(D.dup_clusters(
+        ids, pairs(), "doc_id", edge_bound=D._CC_DUAL_EDGE_MAX + 1))
     assert dense == sparse
-    # dense=None decides from a staging checkpoint count; forcing the
-    # threshold to 0 routes even this tiny graph through dense mode
+    # edge_bound=None decides from a staging checkpoint count; forcing
+    # the threshold to 0 routes even this tiny graph through dense mode
     monkeypatch.setattr(D, "_CC_DUAL_EDGE_MAX", 0)
     decided = _cluster_rows(D.dup_clusters(ids, pairs(), "doc_id"))
     assert decided == sparse
@@ -394,6 +409,7 @@ def test_dup_clusters_shuffle_rounds_match_broadcast(spark, monkeypatch):
     broadcasting the label table; the 40-node path clusters the same."""
     from morph_kgc_spark.operators import dedup as D
 
+    monkeypatch.setattr(D, "_CC_LOCAL_MAX_EDGES", -1)  # force the rounds
     n = 40
     ids = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
     pairs = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
@@ -413,3 +429,38 @@ def test_dup_clusters_shuffle_rounds_match_broadcast(spark, monkeypatch):
     shuffled = _cluster_rows(D.dup_clusters(ids, pairs, "doc_id"))
     assert not broadcasts
     assert shuffled == default == [(i, 0) for i in range(n)]
+
+
+def test_dup_clusters_local_finish_matches_rounds(spark, monkeypatch):
+    """The one-task local finish and the forced Spark rounds give the
+    same components: on the sf0.001 corpus through
+    simhash_dup_clusters (equal to the DuckDB oracle) and on the 40-node
+    path through dup_clusters."""
+    import duckdb
+
+    from morph_kgc_spark import oracles
+    from morph_kgc_spark.operators import dedup as D
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    n = 40
+    ids = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
+    pairs = spark.createDataFrame([(i + 1, i) for i in range(n - 1)],
+                                  ["id_a", "id_b"])
+
+    def both():
+        return (_cluster_rows(D.simhash_dup_clusters(
+                    docs, "doc_id", "text", max_hamming=6)),
+                _cluster_rows(D.dup_clusters(ids, pairs, "doc_id")))
+
+    local = both()
+    monkeypatch.setattr(D, "_CC_LOCAL_MAX_EDGES", -1)
+    assert both() == local
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE VIEW documents AS SELECT * FROM read_parquet("
+                    "'/root/testdata/sf0.001/documents.parquet')")
+        want = sorted(con.execute(oracles.dedup_clusters()).fetchall())
+    finally:
+        con.close()
+    assert local[0] == want
+    assert local[1] == [(i, 0) for i in range(n)]
