@@ -9,12 +9,21 @@ directory layout:
 
     <root>/bucket=<k>/part-*.parquet       (data, atomic via staging+rename)
     <root>/_commits/bucket_<k>.json        (commit marker: metrics+lineage)
+    <root>/_staging/bucket=<k>/            (the current batch, pre-rename)
 
 A bucket is committed iff its marker exists; ``write_checkpointed``
 skips committed buckets, so a killed run resumes where it stopped, and a
 re-run of a fully-committed table is a no-op. Markers carry row counts,
 wall time, and a lineage fingerprint (plan + input description) so a
-resume against *different* inputs is refused instead of silently mixed.
+resume against *different* inputs is refused, before anything is
+written, instead of silently mixed.
+
+One call is one batch: a single partitioned write job stages every
+uncommitted bucket, one count job reads the per-bucket rows back, and
+then each bucket is renamed into place and marked on its own. That is
+the Iceberg shape (one snapshot commit per partition batch); the cost is
+in-run granularity: a kill during the write job keeps nothing from that
+run, where a job per bucket kept the buckets already finished.
 """
 
 from __future__ import annotations
@@ -68,54 +77,74 @@ def write_checkpointed(df: DataFrame, root: str, key_col: str = "subject",
                        n_buckets: int = 16, lineage: str = "") -> CommitStats:
     """Write df partitioned by bucket(key_col), resuming past commits.
 
-    One Spark job per *uncommitted* bucket (a driver loop — fine for
-    O(10²) buckets; an Iceberg sink replaces the loop with a single
-    atomic snapshot commit per partition batch at cluster scale).
+    One call runs one partitioned write job for every *uncommitted*
+    bucket and one count job over the staged files, whatever
+    ``n_buckets`` is. Every marker is checked against the lineage before
+    anything is written. Each bucket then commits on its own (rename
+    into place, then marker). A kill during the write job commits
+    nothing from this run; the next run rewrites every bucket still
+    without a marker. Each marker's ``seconds`` is its share of the
+    batch's wall time, so ``commit_metrics`` sums to the batch.
     """
-    os.makedirs(os.path.join(root, "_commits"), exist_ok=True)
-    bdf = bucketed(df, key_col, n_buckets).persist()
-    try:
-        fingerprint = _lineage_fingerprint(df, lineage)
+    commits = os.path.join(root, "_commits")
+    os.makedirs(commits, exist_ok=True)
+    fingerprint = _lineage_fingerprint(df, lineage)
 
-        written, skipped, total_rows = [], [], 0
-        for k in range(n_buckets):
-            marker = os.path.join(root, "_commits", f"bucket_{k}.json")
-            if os.path.exists(marker):
-                with open(marker) as f:
-                    prev = json.load(f)
-                if prev.get("lineage") != fingerprint:
-                    raise ValueError(
-                        f"bucket {k} was committed from different lineage "
-                        f"{prev.get('lineage')[:12]}… (current {fingerprint[:12]}…); "
-                        "refusing to mix — clear the sink or bump the root path")
-                skipped.append(k)
-                continue
+    todo, skipped = [], []
+    for k in range(n_buckets):
+        marker = os.path.join(commits, f"bucket_{k}.json")
+        if not os.path.exists(marker):
+            todo.append(k)
+            continue
+        with open(marker) as f:
+            prev = json.load(f)
+        if prev.get("lineage") != fingerprint:
+            raise ValueError(
+                f"bucket {k} was committed from different lineage "
+                f"{prev.get('lineage')[:12]}… (current {fingerprint[:12]}…); "
+                "refusing to mix — clear the sink or bump the root path")
+        skipped.append(k)
+    if not todo:
+        return CommitStats([], skipped, 0)
 
-            part = bdf.where(F.col("bucket") == k).drop("bucket")
-            final_dir = os.path.join(root, f"bucket={k}")
-            staging = os.path.join(root, f"_staging_bucket_{k}")
-            t0 = time.time()
-            part.write.mode("overwrite").parquet(staging)
-            # metadata-only count from the freshly written footers (the
-            # filtered plan would otherwise recompute the whole branch)
-            n = df.sparkSession.read.parquet(staging).count()
-            if os.path.exists(final_dir):
-                shutil.rmtree(final_dir)
-            os.rename(staging, final_dir)
-            with open(marker + ".tmp", "w") as f:
-                json.dump({
-                    "bucket": k,
-                    "rows": n,
-                    "seconds": round(time.time() - t0, 3),
-                    "lineage": fingerprint,
-                    "committed_at_epoch": int(time.time()),
-                }, f)
-            os.rename(marker + ".tmp", marker)
-            written.append(k)
-            total_rows += n
-        return CommitStats(written, skipped, total_rows)
-    finally:
-        bdf.unpersist()
+    spark = df.sparkSession
+    staging = os.path.join(root, "_staging")
+    shutil.rmtree(staging, ignore_errors=True)
+    t0 = time.time()
+    bdf = bucketed(df, key_col, n_buckets)
+    if skipped:
+        bdf = bdf.where(F.col("bucket").isin(todo))
+    bdf.write.partitionBy("bucket").parquet(staging)
+    # explicit schema: no inference job over the staged footers
+    counts = dict(spark.read.schema(bdf.schema).parquet(staging)
+                  .groupBy("bucket").count().collect())
+    empty = [k for k in todo if k not in counts]
+    if empty:
+        # partitionBy writes no directory for a bucket without rows; give
+        # each one a schema-only part so an all-empty sink stays readable
+        template = os.path.join(staging, "_empty")
+        spark.createDataFrame([], df.schema).write.parquet(template)
+        for k in empty:
+            shutil.copytree(template, os.path.join(staging, f"bucket={k}"))
+    share = (time.time() - t0) / len(todo)
+
+    for k in todo:
+        final_dir = os.path.join(root, f"bucket={k}")
+        if os.path.exists(final_dir):
+            shutil.rmtree(final_dir)
+        os.rename(os.path.join(staging, f"bucket={k}"), final_dir)
+        marker = os.path.join(commits, f"bucket_{k}.json")
+        with open(marker + ".tmp", "w") as f:
+            json.dump({
+                "bucket": k,
+                "rows": counts.get(k, 0),
+                "seconds": round(share, 6),
+                "lineage": fingerprint,
+                "committed_at_epoch": int(time.time()),
+            }, f)
+        os.rename(marker + ".tmp", marker)
+    shutil.rmtree(staging)
+    return CommitStats(todo, skipped, sum(counts.values()))
 
 
 def read_committed(spark, root: str) -> DataFrame:
